@@ -162,7 +162,7 @@ object Main {
     }
 
     // set-up: the input set-up step several times (median reported), then
-    // one warm-up pass so JIT, codegen and the session memo are warm
+    // the workload's warm-up, if it has one
     val reps = (1 to SetupReps).map { _ =>
       val t0 = System.nanoTime(); wl.setupRep(ctx); Stats.sec(System.nanoTime() - t0)
     }

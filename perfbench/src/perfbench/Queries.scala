@@ -104,13 +104,11 @@ object Dashboard {
     Seq(Fixtures.trades, Fixtures.securities)
 
   /** The refresh loop shared with `trading_day`: panel latencies of warm
-    * refreshes go to `lat`; refresh wall times to `pass` / `cold`. With
-    * `settle`, a full GC runs between refreshes (not while streams run).
+    * refreshes and refresh wall times (`pass` / `cold`). With `settle`, a
+    * full GC runs between refreshes (not while streams run).
     */
-  def loop(ctx: Ctx, seconds: Double, d: Dashboard,
-      lat: Option[Phase] = None, settle: Boolean = true): Phase = {
+  def loop(ctx: Ctx, seconds: Double, d: Dashboard, settle: Boolean = true): Phase = {
     val p = new Phase
-    val latTo = lat.orElse(Some(p))
     val t0 = System.nanoTime()
     def elapsed = Stats.sec(System.nanoTime() - t0)
     var colds = 0
@@ -123,7 +121,7 @@ object Dashboard {
         p.cold += d.refresh(ctx, None, "cold")
         if (settle) Main.settle(ctx)
       } else {
-        val s = d.refresh(ctx, latTo, "warm")
+        val s = d.refresh(ctx, Some(p), "warm")
         if (settle) Main.settle(ctx)
         p.pass += s
         warmSec += s
