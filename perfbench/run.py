@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
 """Exporter benchmark: one workload, one seed, one process.
 
-    python3 perfbench/run.py --workload dashboard --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload catchup --seed 1 --seconds 20 --trace 0
 
 Builds the program and the benchmark from source (scalac from the Spark
 distribution, into perfbench/.build), generates the seeded input tables
 (perfbench/gen.py), runs the workload in one JVM (perfbench.Main), checks
 every output against its DuckDB twin, and prints one JSON object as the
-last line of stdout. See perfbench/README.md.
+last line of stdout. A traced run (--trace 1) first runs the same seed
+with tracing off, to report the tracing overhead. See perfbench/README.md.
 """
 import argparse
 import glob
@@ -26,12 +27,15 @@ BENCH_SRC = os.path.join(HERE, "src")
 BUILD = os.path.join(HERE, ".build")
 WORK = os.path.join(HERE, ".work")
 JARS = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "jars")
-TIMEOUT_S = 170
+# JVM time allowed per invocation, after the build: the trace-off and the
+# traced JVM of a traced run share it
+TIMEOUT_S = 160
 
 # Lineitem rows the inputs are generated at, per workload: catchup replays
-# the whole trade and tick feed, so a longer feed gives longer, steadier
-# backlogs; the others stay at the smallest scale their entries need.
-LINES = {"dashboard": 30000, "catchup": 60000, "trading_day": 30000, "curation": 30000}
+# the whole trade and tick feed (one trade and one tick per lineitem row),
+# four 40,000-row micro-batches per stream; curation stays at the smallest
+# scale its entries need.
+LINES = {"catchup": 160000, "curation": 30000}
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 ADD_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke",
@@ -87,14 +91,10 @@ def build():
     return classes
 
 
-def data_dir(seed, lines):
-    d = os.path.join(WORK, f"data-s{seed}-l{lines}")
-    if not os.path.exists(os.path.join(d, "done")):
-        sys.path.insert(0, HERE)
-        import gen
-        shutil.rmtree(d, ignore_errors=True)
-        gen.generate(d, seed, lines)
-        open(os.path.join(d, "done"), "w").close()
+def generate(d, seed, lines):
+    sys.path.insert(0, HERE)
+    import gen
+    gen.generate(d, seed, lines)
     return d
 
 
@@ -145,27 +145,42 @@ OVERHEAD_METRICS = ["latency_p50_ms", "latency_p90_ms", "pass_s", "cold_pass_s",
                     "throughput_per_s"]
 
 
-def overhead(workload, seconds, trace, res):
-    """Tracing overhead: a traced run's end-to-end numbers against the
-    median of the trace-off runs of the same build, workload and run
-    length made before it in this checkout."""
-    stamp = open(os.path.join(BUILD, "stamp")).read()[:12]
-    log = os.path.join(WORK, f"e2e-{workload}-{seconds:g}s-{stamp}.jsonl")
-    if not trace:
-        with open(log, "a") as f:
-            f.write(json.dumps(res["e2e"]) + "\n")
-        return
-    off = [json.loads(line) for line in open(log)] if os.path.exists(log) else []
-    res["info"]["traced_e2e"] = res["e2e"]
-    res["info"]["trace_off_runs"] = len(off)
-    for m in OVERHEAD_METRICS:
-        vals = sorted(r[m] for r in off if r.get(m) is not None)
-        pct = 0.0
-        if vals:
-            base = vals[len(vals) // 2]
-            on = res["e2e"][m]
-            pct = 100 * ((base - on) if m == "throughput_per_s" else (on - base)) / base
-        res["layers"][f"trace.overhead_pct.{m}"] = pct
+def overhead(off, on):
+    """Tracing overhead per end-to-end metric, in percent of the trace-off
+    value (positive = tracing costs), from two runs of the same seed."""
+    return {f"trace.overhead_pct.{m}":
+            100 * ((off[m] - on[m]) if m == "throughput_per_s" else (on[m] - off[m])) / off[m]
+            for m in OVERHEAD_METRICS}
+
+
+def run_jvm(classes, data, run, a, trace, deadline):
+    """Run the workload in one JVM; returns its result.json, parsed."""
+    shutil.rmtree(run, ignore_errors=True)
+    os.makedirs(os.path.join(run, "tmp"))
+    cores = min(4, os.cpu_count() or 1)
+    cmd = (["java"] + [x for m in ADD_OPENS for x in ("--add-opens", m + "=ALL-UNNAMED")] +
+           ["-Xmx3g", "-Duser.timezone=UTC", "-Dspark.ui.enabled=false",
+            f"-Djava.io.tmpdir={run}/tmp", f"-Dderby.system.home={run}/derby-home",
+            f"-Dderby.stream.error.file={run}/derby.log",
+            # no fsync on Derby commits: the store stands in for ClickHouse,
+            # and shared-disk flush latency would swamp the Spark-side costs
+            "-Dderby.system.durability=test",
+            "-cp", classes + os.pathsep + os.path.join(JARS, "*"), "perfbench.Main",
+            f"dir={data}", f"run={run}", f"workload={a.workload}",
+            f"seconds={a.seconds}", f"trace={trace}", f"cores={cores}"])
+    log_path = os.path.join(run, "jvm.log")
+    with open(log_path, "w") as log:
+        proc = subprocess.Popen(cmd, stdout=log, stderr=subprocess.STDOUT, cwd=run)
+        try:
+            rc = proc.wait(timeout=max(1.0, deadline - time.time()))
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+            die(f"workload did not finish within {TIMEOUT_S} s of JVM time")
+    if rc != 0 or not os.path.exists(os.path.join(run, "result.json")):
+        sys.stderr.write(open(log_path, errors="replace").read()[-4000:])
+        die(f"benchmark JVM exited with code {rc}")
+    return json.load(open(os.path.join(run, "result.json")))
 
 
 def main():
@@ -185,45 +200,32 @@ def main():
 
     t_start = time.time()
     classes = build()
-    data = data_dir(a.seed, LINES[a.workload])
-    run = os.path.join(WORK, f"run-{os.getpid()}")
-    shutil.rmtree(run, ignore_errors=True)
-    os.makedirs(os.path.join(run, "tmp"))
-    cores = min(4, os.cpu_count() or 1)
-    cmd = (["java"] + [x for m in ADD_OPENS for x in ("--add-opens", m + "=ALL-UNNAMED")] +
-           ["-Xmx3g", "-Duser.timezone=UTC", "-Dspark.ui.enabled=false",
-            f"-Djava.io.tmpdir={run}/tmp", f"-Dderby.system.home={run}/derby-home",
-            f"-Dderby.stream.error.file={run}/derby.log",
-            # no fsync on Derby commits: the store stands in for ClickHouse,
-            # and shared-disk flush latency would swamp the Spark-side costs
-            "-Dderby.system.durability=test",
-            "-cp", classes + os.pathsep + os.path.join(JARS, "*"), "perfbench.Main",
-            f"dir={data}", f"run={run}", f"workload={a.workload}", f"seed={a.seed}",
-            f"seconds={a.seconds}", f"trace={a.trace}", f"cores={cores}"])
-    log_path = os.path.join(run, "jvm.log")
-    t_launch = time.time()
+    deadline = time.time() + TIMEOUT_S
+    work = os.path.join(WORK, f"run-{os.getpid()}")
+    shutil.rmtree(work, ignore_errors=True)
     try:
-        with open(log_path, "w") as log:
-            proc = subprocess.Popen(cmd, stdout=log, stderr=subprocess.STDOUT, cwd=run)
-            try:
-                rc = proc.wait(timeout=TIMEOUT_S)
-            except subprocess.TimeoutExpired:
-                proc.kill()
-                proc.wait()
-                die(f"workload did not finish within {TIMEOUT_S} s")
-        if rc != 0 or not os.path.exists(os.path.join(run, "result.json")):
-            sys.stderr.write(open(log_path, errors="replace").read()[-4000:])
-            die(f"benchmark JVM exited with code {rc}")
-        res = json.load(open(os.path.join(run, "result.json")))
+        data = generate(os.path.join(work, "data"), a.seed, LINES[a.workload])
+        t_launch = time.time()
+        failures = []
+        # a traced run is paired with a trace-off run of the same seed, so
+        # that the overhead compares like with like
+        off = None
+        if a.trace:
+            off = run_jvm(classes, data, os.path.join(work, "off"), a, 0, deadline)
+            failures += off["failures"]
+        res = run_jvm(classes, data, os.path.join(work, "run"), a, a.trace, deadline)
         t_jvm = time.time()
-        failures = res["failures"] + run_checks(res["checks"], data)
+        failures += res["failures"] + run_checks(res["checks"], data)
         res["info"]["check_s"] = round(time.time() - t_jvm, 3)
     finally:
-        shutil.rmtree(run, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
     res["info"]["prep_s"] = round(t_launch - t_start, 3)
     res["info"]["jvm_s"] = round(t_jvm - t_launch, 3)
-    overhead(a.workload, a.seconds, a.trace, res)
+    if off is not None:
+        res["info"]["trace_off_e2e"] = off["e2e"]
+        res["info"]["trace_on_e2e"] = res["e2e"]
+        res["layers"].update(overhead(off["e2e"], res["e2e"]))
     values = res["layers"] if a.trace else res["e2e"]
     missing = [n for n in wanted if values.get(n) is None]
     if missing:
@@ -234,7 +236,7 @@ def main():
         print(f"info {k} = {v}")
     for n in wanted:
         print(f"metric {n} = {values[n]} {units[n]}")
-    attempted = res["attempted"] + len(res["checks"])
+    attempted = res["attempted"] + len(res["checks"]) + (off["attempted"] if off else 0)
     print(json.dumps({
         "correct": not failures,
         "attempted": attempted,

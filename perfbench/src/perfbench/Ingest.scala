@@ -103,10 +103,10 @@ object Feed {
   * `Parse.trades`, ticks through `CandleStream.candles`, each into the
   * store through `Sinks.jdbcBatchIdempotent` from `foreachBatch` (what
   * `jdbcStreamAppendIdempotent` does), so each sink call can be timed.
-  * With `replayEvery > 0`, every `replayEvery`-th trade batch is
-  * delivered a second time under the same batch id, as after a reconnect.
+  * Every `ReplayEvery`-th trade batch is delivered a second time under
+  * the same batch id, as after a reconnect.
   */
-final class Streams(ctx: Ctx, store: Store, episode: String, replayEvery: Int) {
+final class Streams(ctx: Ctx, store: Store, episode: String) {
   import ctx.spark.implicits._
   private implicit val sqlCtx: SQLContext = ctx.spark.sqlContext
 
@@ -133,7 +133,7 @@ final class Streams(ctx: Ctx, store: Store, episode: String, replayEvery: Int) {
     val t1 = System.nanoTime()
     sinkMs.add(Stats.ms(t1 - t0))
     commitNs(stream).put(batchId, t1)
-    if (replayEvery > 0 && stream == "trades" && batchId % replayEvery == replayEvery - 1) {
+    if (stream == "trades" && batchId % Streams.ReplayEvery == Streams.ReplayEvery - 1) {
       val before = store.tradeCount()
       Tracer.span(ctx.tracer, ctx.spark, s"$req/replay", s"$req/sink", req, "sources", table) {
         Sinks.jdbcBatchIdempotent(df, store.url, table, store.props, s"$stream-$episode", batchId)
@@ -166,15 +166,15 @@ final class Streams(ctx: Ctx, store: Store, episode: String, replayEvery: Int) {
 
   def stop(): Unit = queries.foreach(_.stop())
 
-  /** (batch id, first addData call, last addData call, rows) per
-    * micro-batch, from the query's progress reports.
-    */
-  def batches(stream: String): Seq[(Long, Long, Long, Long)] =
-    query(stream).recentProgress.toSeq.filter(_.numInputRows > 0).map { p =>
-      def off(s: String): Long = if (s == null || s == "null") -1L else s.trim.toLong
-      (p.batchId, off(p.sources(0).startOffset) + 1, off(p.sources(0).endOffset), p.numInputRows)
-    }
+  /** (batch id, rows) per micro-batch, from the query's progress reports. */
+  def batches(stream: String): Seq[(Long, Long)] =
+    query(stream).recentProgress.toSeq.filter(_.numInputRows > 0)
+      .map(p => (p.batchId, p.numInputRows))
+}
 
+object Streams {
+  /** Trade batches between two redeliveries. */
+  val ReplayEvery = 4
 }
 
 /** Untimed output checks of an ingest episode. */
@@ -238,18 +238,26 @@ object ClosedLoop {
   */
 class Catchup extends Workload {
   private var feed: Feed = _
-  private val store = new IngestState
+  private var store: Store = _
   private var episodes = 0
+  private val sinkMs = ArrayBuffer.empty[Double]
+  private var replays = 0L
+  private var skipped = 0L
 
   def setupRep(ctx: Ctx): Unit = {
     ctx.clear()
     ctx.build(Feed.Tables)
   }
 
+  /** Collect the feed, create the store, and replay one batch's worth of
+    * rows (half a batch per backlog), so the measured episodes start
+    * JIT-warm.
+    */
   def warmup(ctx: Ctx): Unit = {
     feed = new Feed(ctx)
-    store.init(ctx)
-    val n = math.min(feed.trades.length, 2 * Catchup.BatchRows)
+    store = new Store(ctx)
+    store.create()
+    val n = math.min(feed.trades.length, Catchup.BatchRows)
     episode(ctx, new Phase, feed.trades.take(n), feed.ticks.take(n), check = false)
   }
 
@@ -257,8 +265,8 @@ class Catchup extends Workload {
       check: Boolean): Unit = {
     episodes += 1
     val ep = s"c$episodes"
-    store.s.truncate()
-    val st = new Streams(ctx, store.s, ep, replayEvery = 4)
+    store.truncate()
+    val st = new Streams(ctx, store, ep)
     st.start()
     try {
       val (ta, tb) = trades.splitAt(trades.length / 2)
@@ -272,14 +280,18 @@ class Catchup extends Workload {
         if (cold) p.cold += sec else p.pass += sec
         p.work += t.length + k.length
         p.workSec += sec
-        for (s <- Seq("trades", "ticks"); (id, _, _, rows) <- st.batches(s) if !done(s).contains(id))
+        for (s <- Seq("trades", "ticks"); (id, rows) <- st.batches(s) if !done(s).contains(id))
           p.addLat(Stats.ms(st.commitNs(s).get(id) - t0), rows)
       }
     } finally st.stop()
-    store.account(ctx, st)
-    if (check) IngestChecks.store(ctx, store.s, ep, trades.length)
+    if (ctx.tracer.isDefined) {
+      sinkMs ++= st.sinkMs.asScala
+      replays += st.replays.get()
+      skipped += st.replaysSkipped.get()
+    }
+    if (check) IngestChecks.store(ctx, store, ep, trades.length)
     ctx.layers("ingest.rows_in") = (trades.length + ticks.length).toDouble
-    ctx.layers("ingest.rows_out") = store.s.tradeCount().toDouble
+    ctx.layers("ingest.rows_out") = store.tradeCount().toDouble
     Main.settle(ctx)
   }
 
@@ -299,36 +311,20 @@ class Catchup extends Workload {
     * runs once, on the store the last episode left.
     */
   def finish(ctx: Ctx): Unit = {
-    IngestChecks.candles(ctx, store.s, s"c$episodes", feed.ticks)
-    store.finish(ctx)
+    IngestChecks.candles(ctx, store, s"c$episodes", feed.ticks)
+    if (ctx.tracer.isDefined) {
+      ctx.layers("sources.sink_ms") = Main.nz(Stats.median(sinkMs))
+      ctx.layers("sources.sink_calls") = sinkMs.length.toDouble
+      ctx.layers("sources.replays") = replays.toDouble
+      ctx.layers("sources.replays_skipped") = skipped.toDouble
+    }
   }
 }
 
 object Catchup {
-  /** Rows per micro-batch: large and fixed, as a replay after a reconnect. */
-  val BatchRows = 5000
-}
-
-/** Store plus the sink/stream accounting both ingest workloads share. */
-final class IngestState {
-  var s: Store = _
-  val sinkMs = ArrayBuffer.empty[Double]
-  var replays = 0L
-  var skipped = 0L
-
-  def init(ctx: Ctx): Unit = { s = new Store(ctx); s.create() }
-
-  /** Keep an episode's sink and progress numbers when tracing is on. */
-  def account(ctx: Ctx, st: Streams): Unit = if (ctx.tracer.isDefined) {
-    sinkMs ++= st.sinkMs.asScala
-    replays += st.replays.get()
-    skipped += st.replaysSkipped.get()
-  }
-
-  def finish(ctx: Ctx): Unit = if (ctx.tracer.isDefined) {
-    ctx.layers("sources.sink_ms") = Main.nz(Stats.median(sinkMs))
-    ctx.layers("sources.sink_calls") = sinkMs.length.toDouble
-    ctx.layers("sources.replays") = replays.toDouble
-    ctx.layers("sources.replays_skipped") = skipped.toDouble
-  }
+  /** Rows per micro-batch: large and fixed, as a replay after a reconnect,
+    * and large enough that per-row work outweighs the per-batch floor
+    * (see perfbench/README.md, "Batch size").
+    */
+  val BatchRows = 40000
 }

@@ -2,7 +2,7 @@ package perfbench
 
 import scala.jdk.CollectionConverters._
 
-/** Reduces a traced half to the per-layer metrics. Every name is always
+/** Reduces a traced run to the per-layer metrics. Every name is always
   * emitted; a layer the workload does not touch reports 0.
   */
 object Layers {
@@ -16,14 +16,9 @@ object Layers {
     "streaming.state_update_ms", "streaming.wal_ms", "streaming.plan_ms",
     "streaming.state_commit_ms", "streaming.shards", "streaming.state_rows",
     "streaming.state_mem_mb", "streaming.rows_dropped_by_watermark",
-    "streaming.backlog_rows_max",
     "sources.sink_ms", "sources.sink_rows", "sources.sink_calls",
-    "sources.replays", "sources.replays_skipped",
-    "llm.jobs", "llm.tasks", "llm.spill_mb",
-    "jvm.gc_ms", "generator.late_ms_max") ++
-    Curation.Entries.flatMap(e => Seq(s"llm.entry_ms.$e.cold", s"llm.entry_ms.$e.rerun")) ++
-    Seq("latency_p50_ms", "latency_p90_ms", "pass_s", "cold_pass_s", "throughput_per_s")
-      .map(m => s"trace.overhead_pct.$m")
+    "sources.replays", "sources.replays_skipped", "jvm.gc_ms") ++
+    Curation.Entries.flatMap(e => Seq(s"llm.entry_ms.$e.cold", s"llm.entry_ms.$e.rerun"))
 
   private val MB = 1048576.0
 
@@ -31,22 +26,17 @@ object Layers {
     val L = ctx.layers
     def med(xs: Iterable[Double]) = Main.nz(Stats.median(xs))
 
-    // per SparkEntry.queries call: dashboard panels and curation entries
-    val panels = tr.spansOf("queries") ++ tr.spansOf("llm")
-    val pj = panels.map(s => s -> tr.jobs(s.id))
+    // per SparkEntry.queries call: the curation entries
+    val calls = tr.spansOf("llm")
+    val pj = calls.map(s => s -> tr.jobs(s.id))
     L("queries.jobs") = med(pj.map(_._2.jobs.toDouble))
     L("queries.stages") = med(pj.map(_._2.stages.toDouble))
     L("queries.tasks") = med(pj.map(_._2.tasks.toDouble))
     L("queries.task_ms") = med(pj.map(_._2.taskMs.toDouble))
-    L("queries.plan_ms") = med(panels.flatMap(s => Option(tr.planMs.get(s.id)).map(_.doubleValue)))
+    L("queries.plan_ms") = med(calls.flatMap(s => Option(tr.planMs.get(s.id)).map(_.doubleValue)))
     L("queries.core_util") = med(pj.map { case (s, a) => a.taskMs / (s.ms * ctx.cores) })
     L("queries.shuffle_mb") = med(pj.map(_._2.shuffleBytes / MB))
     L("queries.spill_mb") = pj.map(_._2.spillBytes / MB).sum
-
-    val entries = tr.spansOf("llm").map(s => tr.jobs(s.id))
-    L("llm.jobs") = med(entries.map(_.jobs.toDouble))
-    L("llm.tasks") = med(entries.map(_.tasks.toDouble))
-    L("llm.spill_mb") = entries.map(_.spillBytes / MB).sum
 
     // micro-batches, from the StreamingQueryListener
     val prog = tr.progress.asScala.toSeq.filter(_.numInputRows > 0)

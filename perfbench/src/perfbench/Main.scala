@@ -15,8 +15,8 @@ import graft.SparkEntry
 import graft.fixtures.Fixtures
 
 /** Samples of one measured phase, reduced to the end-to-end metrics.
-  * `lat` holds (latency ms, weight) pairs: a panel or entry call weighs
-  * 1, a micro-batch weighs the rows it committed.
+  * `lat` holds (latency ms, weight) pairs: a curation pass weighs 1, a
+  * micro-batch weighs the rows it committed.
   */
 final class Phase {
   val lat = ArrayBuffer.empty[(Double, Long)]
@@ -27,14 +27,21 @@ final class Phase {
 
   def addLat(ms: Double, w: Long = 1L): Unit = synchronized { lat += ((ms, w)) }
 
+  /** Weighted percentile. Where the rank falls exactly between two
+    * samples, as the median of an even count does, their midpoint: in
+    * `catchup` every batch weighs the same, so the median sits between
+    * the trade stream's first batches and the tick stream's second ones,
+    * and the midpoint keeps both streams in it.
+    */
   def latPct(q: Double): Double = {
     val s = lat.sortBy(_._1)
     val total = s.map(_._2).sum
     if (total == 0) Double.NaN
     else {
-      val rank = math.max(1L, math.ceil(q * total).toLong)
+      val rank = q * total
       var acc = 0L
-      s.find { case (_, w) => acc += w; acc >= rank }.map(_._1).get
+      val i = s.indexWhere { case (_, w) => acc += w; acc >= rank }
+      if (acc == rank && i + 1 < s.length) (s(i)._1 + s(i + 1)._1) / 2 else s(i)._1
     }
   }
 
@@ -50,8 +57,7 @@ final class Phase {
 
 /** Shared state of one benchmark run. */
 final class Ctx(val spark: SparkSession, val dir: String, val run: String,
-    val seed: Long, val cores: Int) {
-  val rng = new scala.util.Random(seed)
+    val cores: Int) {
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries
   lazy val oracle: Map[String, String] = SparkEntry.oracleSql
   var tracer: Option[Tracer] = None
@@ -100,14 +106,16 @@ final class Ctx(val spark: SparkSession, val dir: String, val run: String,
     names.filter(queries.contains)
   }
 
-  /** Save an entry's last result for the DuckDB oracle check. */
-  def saveForOracle(name: String, rows: Array[Row], df: DataFrame): Unit =
+  /** Save one call's result of entry `name` (from pass `pass`) for the
+    * DuckDB oracle check.
+    */
+  def saveForOracle(name: String, pass: String, rows: Array[Row], df: DataFrame): Unit =
     oracle.get(name) match {
       case Some(sql) =>
-        val path = s"$run/out/$name"
+        val path = s"$run/out/$name/$pass"
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
           .coalesce(1).write.mode("overwrite").parquet(path)
-        check(Map("kind" -> "oracle", "name" -> name, "sql" -> sql, "path" -> path))
+        check(Map("kind" -> "oracle", "name" -> s"$name/$pass", "sql" -> sql, "path" -> path))
       case None => fail(s"$name: no DuckDB oracle in SparkEntry.oracleSql")
     }
 }
@@ -124,8 +132,7 @@ trait Workload {
   * `result.json` into the run directory. Output checks that need DuckDB
   * are listed there and run by the launcher.
   *
-  * Args: key=value pairs — dir, run, workload, seed, seconds, trace,
-  * cores.
+  * Args: key=value pairs — dir, run, workload, seconds, trace, cores.
   */
 object Main {
   val SetupReps = 3
@@ -152,11 +159,9 @@ object Main {
     spark.sparkContext.setLogLevel("ERROR")
     val sessionS = (System.currentTimeMillis() - jvmStartMs) / 1000.0
 
-    val ctx = new Ctx(spark, opts("dir"), run, opts("seed").toLong, cores)
+    val ctx = new Ctx(spark, opts("dir"), run, cores)
     val wl: Workload = opts("workload") match {
-      case "dashboard" => new Dashboard
       case "catchup" => new Catchup
-      case "trading_day" => new TradingDay
       case "curation" => new Curation
       case w => throw new IllegalArgumentException(s"unknown workload '$w'")
     }
@@ -175,8 +180,8 @@ object Main {
     ctx.info("setup_warmup_s") = warmS
 
     // traced runs attach the benchmark's listeners for the whole measured
-    // phase; their end-to-end numbers are compared with trace-off runs'
-    // by the launcher (the tracing overhead)
+    // phase; the launcher compares their end-to-end numbers with a
+    // trace-off run of the same seed (the tracing overhead)
     val tr = if (traced) Some(new Tracer(spark)) else None
     ctx.tracer = tr
     tr.foreach(_.attach())

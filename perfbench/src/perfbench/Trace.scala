@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** One timed call at a layer boundary. Spans of one request share the
-  * `request` id (a refresh, a micro-batch, a curation pass); `parent` is
+  * `request` id (a curation pass, a micro-batch); `parent` is
   * the span that caused this one.
   */
 final case class Span(id: String, parent: String, request: String,
