@@ -84,24 +84,14 @@ object Fixtures {
   // engine's post-ingest "tables". A deployment materializes these once
   // (time-partitioned, key-sorted — Sinks.batchAppend); recomputing the
   // wire projection per query would model re-ingesting on every read.
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  // NOT computeIfAbsent: a builder may memoize ANOTHER table (e.g.
-  // embeddingsRedelivered builds on embeddingsNearDup), and a nested
-  // computeIfAbsent on the same map throws "Recursive update" whenever
-  // the two keys share a hash bin — which depends on the applicationId
-  // string, i.e. nondeterministically per JVM (found by ScaleProbe,
-  // round 7). Build outside the map, then putIfAbsent; a lost race
-  // returns the winner — both builds share one plan-keyed Spark cache
-  // entry, so the duplicate .cache() is idempotent and nothing needs
-  // unpersisting.
+  // Session lifetime in the one cache owner ([[SessionCache]]), whose
+  // build discipline lets a builder memoize ANOTHER table (e.g.
+  // embeddingsRedelivered builds on embeddingsNearDup).
   private def memo(spark: SparkSession, dir: String, name: String,
-      bytesPerPartDefault: Long = 64L << 10)(
-      build: => DataFrame): DataFrame = {
-    val key = spark.sparkContext.applicationId + "#" + dir + "#" + name
-    val existing = tableCache.get(key)
-    if (existing != null) existing
-    else {
+      bytesPerPart: Long = 64L << 10)(
+      build: => DataFrame): DataFrame =
+    SessionCache(SessionCache.Session,
+        "table#" + spark.sparkContext.applicationId + "#" + dir + "#" + name) {
       // Normalize cached-table parallelism (round 8): the driver fixtures
       // are single-file single-row-group parquet, so the scan — and the
       // partitioning every cached table hands its consumers — is ONE task
@@ -111,11 +101,11 @@ object Fixtures {
       // measured llm_bpe_apply running 2x FASTER on 10x the data purely
       // because the bigger corpus happened to be written as 32 files.
       //
-      // The target is SIZE-PROPORTIONAL, not defaultParallelism flat:
-      // MemoAbProbe measured a flat 32 costing +0.5–2 s warm on every
-      // multi-job consumer of a 5k-row table (32 tasks re-deserializing
-      // large task binaries — Bloom literals, broadcast stat tables — per
-      // job, every job). One partition per ~64 KB of plan-stats bytes,
+      // The target is SIZE-PROPORTIONAL, not defaultParallelism flat: a
+      // single-JVM interleaved A/B (PERF_NOTES.md, round 15) measured a
+      // flat 32 costing +0.5–2 s warm on every multi-job consumer of a
+      // 5k-row table (32 tasks re-deserializing large task binaries —
+      // Bloom literals, broadcast stat tables — per job, every job). One partition per ~64 KB of plan-stats bytes,
       // clamped to [1, defaultParallelism]: tiny dims stay near-serial
       // (their per-task overhead dwarfs their work), the text corpus gets
       // enough tasks that a CPU-heavy derivation isn't single-threaded,
@@ -128,52 +118,12 @@ object Fixtures {
       // histograms multiply child sizes, and a BigInt past 2^63 would
       // otherwise .toLong-wrap to an arbitrary (possibly negative)
       // target and silently skip normalization (round-8 review finding).
-      // Divisor overridable for single-JVM A/B probes (round 15).
-      val bytesPerPart = sys.props.get("graft.memo.bytesPerPart")
-        .map { v =>
-          // probe knob — fail with the knob's NAME, not a bare
-          // NumberFormat/ArithmeticException from fixture construction
-          // (r15 ADVICE): non-numeric or non-positive values would
-          // otherwise surface as an unattributed crash inside memo()
-          val parsed = scala.util.Try(v.toLong).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft.memo.bytesPerPart must be a positive long, got '$v'"))
-          require(parsed > 0,
-            s"graft.memo.bytesPerPart must be a positive long, got '$v'")
-          parsed
-        }.getOrElse(bytesPerPartDefault)
       val target = (bytes / BigInt(bytesPerPart))
         .min(BigInt(spark.sparkContext.defaultParallelism))
         .max(BigInt(1)).toInt
-      // A/B probe escape hatch (system property so a single-JVM interleaved
-      // probe can flip it between cache-cleared reps)
-      val normalize = !sys.props.get("graft.memo.noNormalize").contains("1")
-      val df = if (normalize && df0.rdd.getNumPartitions < target) df0.repartition(target) else df0
-      val built = df.cache()
-      val prev = tableCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      val df = if (df0.rdd.getNumPartitions < target) df0.repartition(target) else df0
+      df.cache()
     }
-  }
-
-  /** Entry-internal derived-frame memo (round 16). The r15 plan-truncation
-    * pass replaced several `.cache()` sites with `localCheckpoint()` —
-    * which truncates lineage but, unlike `.cache()`, is NOT plan-keyed:
-    * a builder re-invoked for the warm lane's second rep creates a FRESH
-    * checkpoint and re-executes the whole derivation (KeyProbe r16:
-    * llm_ann_ledger warm ≈ cold ≈ 4.1 s — zero steady-state reuse). And
-    * plan-keyed `.cache()` reuse cannot help closure-bearing plans
-    * (mapPartitions codecs): each builder invocation creates a new
-    * closure instance, canonicalization misses, and every rep leaks a new
-    * cached copy. This registry is the NAME-keyed twin of [[memo]] for
-    * such frames: one materialization per (application, dir, name),
-    * returned to every builder re-invocation, dropped by
-    * [[clearDerivedCache]] — which makes that function the single release
-    * owner the r14 verdict asked for (item 6): the bench clears between
-    * keys, a production session composing entries calls it once when its
-    * working set should drop.
-    */
-  private val derivedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Materialize a frame as in-engine blocks with lineage truncated.
     * `localCheckpoint()` is only safe where executor loss is impossible —
@@ -188,52 +138,49 @@ object Fixtures {
     if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint()
     else df.cache()
 
-  /** Memoize a [[materialized]] derived frame per (application, dir,
-    * name). Same non-recursive build-then-putIfAbsent discipline as
-    * [[memo]]; a lost race leaves a duplicate checkpoint whose blocks are
-    * released by the next [[clearDerivedCache]] (harmless — nothing
-    * references it).
+  /** Entry-internal derived-frame memo (round 16). The r15 plan-truncation
+    * pass replaced several `.cache()` sites with `localCheckpoint()` —
+    * which truncates lineage but, unlike `.cache()`, is NOT plan-keyed:
+    * a builder re-invoked for the warm lane's second rep creates a FRESH
+    * checkpoint and re-executes the whole derivation (KeyProbe r16:
+    * llm_ann_ledger warm ≈ cold ≈ 4.1 s — zero steady-state reuse). And
+    * plan-keyed `.cache()` reuse cannot help closure-bearing plans
+    * (mapPartitions codecs): each builder invocation creates a new
+    * closure instance, canonicalization misses, and every rep leaks a new
+    * cached copy. This memo is the NAME-keyed twin of [[memo]] for
+    * such frames: one materialization per (application, dir, name),
+    * returned to every builder re-invocation, session lifetime in
+    * [[SessionCache]] and so dropped by [[clearDerivedCache]] — the
+    * single release owner the r14 verdict asked for (item 6): the bench
+    * clears between keys, a production session composing entries calls
+    * it once when its working set should drop.
     */
   def derived(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    val key = spark.sparkContext.applicationId + "#" + dir + "#" + name
-    val existing = derivedCache.get(key)
-    if (existing != null) existing
-    else {
-      val built = materialized(build)
-      val prev = derivedCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
+      build: => DataFrame): DataFrame =
+    SessionCache(SessionCache.Session,
+      "derived#" + spark.sparkContext.applicationId + "#" + dir + "#" + name)(
+      materialized(build))
 
-  /** Drop every memoized derived table AND Spark's block cache (which is
-    * keyed by canonicalized plan, so even non-memoized `.cache()` calls
-    * inside query builders are reused across invocations). Used by the
-    * bench's cold lane to measure the real scan path, and the release
-    * owner for every session-scoped cache a query builder creates (r14
-    * verdict item 6): production callers composing several entries call
-    * this once when the accumulated working set should drop.
-    *
-    * Deliberately NOT dropped (app-lifetime DRIVER artifacts, not engine
-    * storage — each is a broadcast-sized deterministic table under the
-    * train-once/ingest-once contract argued at its site): the BPE merge
-    * table memo (`LlmQueries.bpeMemo`), the CC pair-stream scratch dirs
-    * and the e2e ingested-store/streaming-replay scratch
-    * ([[graft.sources.Scratch]]). A fresh JVM rebuilds all of them from
-    * the parquet inputs.
+  /** Drop every session-lifetime entry of [[SessionCache]] AND Spark's
+    * block cache (which is keyed by canonicalized plan, so even
+    * non-memoized `.cache()` calls inside query builders are reused
+    * across invocations). Used by the bench's cold lane to measure the
+    * real scan path, and the release owner for every session-scoped cache
+    * a query builder creates (r14 verdict item 6): production callers
+    * composing several entries call this once when the accumulated
+    * working set should drop. Application-lifetime entries survive (the
+    * lifetime table is in [[SessionCache]]'s scaladoc).
     */
   def clearDerivedCache(spark: SparkSession): Unit = {
-    tableCache.clear()
-    derivedCache.clear()
-    // dimCache too (round 10): catalog.clearCache() UNPERSISTS the dim
-    // frames, so a surviving dimCache entry would be a half-state — the
-    // same DataFrame object, silently no longer cache-marked. Queries
-    // built on it then inline the raw derivation (filters push through
-    // the dim's distinct, join sides change shape — RuntimeFilterSpec
-    // caught the drift), and the `.cache()` is never re-applied for the
-    // lifetime of the app. Clearing the memo makes the next access
-    // rebuild AND re-mark, restoring the documented warm-lane state.
-    dimCache.clear()
+    // the securities dim is dropped too (round 10): catalog.clearCache()
+    // UNPERSISTS the dim frame, so a surviving memo entry would be a
+    // half-state — the same DataFrame object, silently no longer
+    // cache-marked. Queries built on it then inline the raw derivation
+    // (filters push through the dim's distinct, join sides change shape —
+    // RuntimeFilterSpec caught the drift), and the `.cache()` is never
+    // re-applied for the lifetime of the app. Dropping the entry makes
+    // the next access rebuild AND re-mark.
+    SessionCache.clearSession()
     // Blocking release (round 14, r13 verdict items 2/6): catalog
     // .clearCache() unpersists every cached plan NON-blocking — the
     // storage blocks of the PREVIOUS key's caches are still being torn
@@ -377,12 +324,12 @@ object Fixtures {
 
   // The 60-row dim is built via a distinct() shuffle of `part`; memoize the
   // cached plan per (session, dir) so repeated query invocations reuse one
-  // in-memory copy instead of rescanning (VERDICT perf note).
-  private val dimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  // in-memory copy instead of rescanning (VERDICT perf note). A plain
+  // .cache(), outside [[memo]]'s normalization: under AQE,
+  // `rdd.getNumPartitions` on the distinct() plan would run a job.
   def securities(spark: SparkSession, dir: String): DataFrame =
-    dimCache.computeIfAbsent(spark.sparkContext.applicationId + "#" + dir, _ =>
+    SessionCache(SessionCache.Session,
+      "securities#" + spark.sparkContext.applicationId + "#" + dir)(
       spark.read.parquet(s"$dir/part.parquet")
         .selectExpr("CAST(p_partkey % 60 AS INT) AS sec_n").distinct()
         .selectExpr(securityCols: _*)

@@ -375,7 +375,10 @@ object Multimodal {
     */
   def renderPngTable(seeds: Dataset[RawMedia]): Dataset[RawMedia] = {
     import seeds.sparkSession.implicits._
-    seeds.mapPartitions(_.map(m => RawMedia(m.doc_id, renderPng(m.media))))
+    seeds.mapPartitions { it =>
+      javax.imageio.ImageIO.setUseCache(false)
+      it.map(m => RawMedia(m.doc_id, renderPng(m.media)))
+    }
   }
 
   /** REAL decode + raster checksum over stored container bytes — the

@@ -70,10 +70,14 @@ object SemDedup {
     */
   def guardedAssign(emb: DataFrame, targetClusterSize: Int,
       maxClusterSize: Int): DataFrame = {
-    val n = emb.count()
-    guardedAssignWithK(emb, chooseK(n, targetClusterSize),
+    requireSizes(targetClusterSize, maxClusterSize) // before the count
+    guardedAssignWithK(emb, chooseK(emb.count(), targetClusterSize),
       targetClusterSize, maxClusterSize)
   }
+
+  private def requireSizes(targetClusterSize: Int, maxClusterSize: Int): Unit =
+    require(maxClusterSize >= targetClusterSize,
+      s"maxClusterSize ($maxClusterSize) must be >= targetClusterSize ($targetClusterSize)")
 
   /** [[guardedAssign]] with the codebook size SUPPLIED instead of derived
     * — the body is identical (guardedAssign passes chooseK's value).
@@ -85,8 +89,7 @@ object SemDedup {
     */
   private[graft] def guardedAssignWithK(emb: DataFrame, k: Int,
       targetClusterSize: Int, maxClusterSize: Int): DataFrame = {
-    require(maxClusterSize >= targetClusterSize,
-      s"maxClusterSize ($maxClusterSize) must be >= targetClusterSize ($targetClusterSize)")
+    requireSizes(targetClusterSize, maxClusterSize)
     // K grows with the corpus here (≈ N/target), so the flat O(N·K)
     // assignment is FLOP-quadratic in N — the one shape the r13 audit
     // flagged. assignHier is the two-level replacement (round 14):

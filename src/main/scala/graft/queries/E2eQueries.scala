@@ -43,9 +43,6 @@ import graft.fixtures.Fixtures._
   */
 object E2eQueries {
 
-  private val ingested =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   private[graft] def connProps(): java.util.Properties = {
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.iapi.jdbc.AutoloadedDriver")
@@ -71,23 +68,14 @@ object E2eQueries {
       |  "lotsize" INT, "point_cost" DOUBLE, "sectype" VARCHAR(8),
       |  "quotestype" INT, "active" VARCHAR(5))""".stripMargin
 
-  /** Run the store DDL, optionally dropping first ([[ingest]] retries
-    * clean; [[ingestRestart]] must NOT drop — idempotence there is the
-    * sink's job, which is the point of the entry).
+  /** Run the store DDL — into a new store: every [[ingestOnce]] attempt
+    * fills a fresh scratch dir, so there is nothing to drop.
     */
-  private def createTables(url: String, dropFirst: Boolean): Unit = {
+  private def createTables(url: String): Unit = {
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
-      if (dropFirst)
-        for (t <- Seq("transaq_trades", "transaq_securities"))
-          try st.executeUpdate(s"DROP TABLE $t")
-          catch { case _: java.sql.SQLException => () } // first run: no table
-      for (ddl <- Seq(TradesDdl, SecuritiesDdl))
-        try st.executeUpdate(ddl)
-        catch {
-          case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () // exists
-        }
+      for (ddl <- Seq(TradesDdl, SecuritiesDdl)) st.executeUpdate(ddl)
       st.close()
     } finally conn.close()
   }
@@ -98,41 +86,41 @@ object E2eQueries {
       .collect().sortBy(r => (r.time.getTime, r.time.getNanos, r.trade_no))
   }
 
-  /** Reset a FAILED prior attempt's on-disk state before (re)ingesting
-    * (round 12 review: a memo block that throws records nothing, so the
-    * next call re-runs it — against a poisoned store the securities PK
-    * rejects the re-insert and a fresh MemoryStream cannot resume the
-    * progressed checkpoint). Shut the embedded database down FIRST
-    * (deleting a BOOTED Derby's files corrupts the in-JVM instance;
-    * `shutdown=true` throws SQLException on success and on not-booted —
-    * both fine), then delete the database and checkpoint trees. This is
-    * harness retry hygiene, NOT drop-and-recreate inside the experiment:
-    * the supervised restart under test still reuses the live store and
-    * checkpoint.
+  /** Fill a Derby store named `store` ONCE per scratch `key` — a filled
+    * [[graft.fixtures.SessionCache.scratch]] entry — and return its JDBC
+    * url. `fill` gets the scratch dir (for the checkpoint) and the url.
+    *
+    * A FAILED attempt's embedded database is shut down before the cache
+    * deletes its directory (deleting a BOOTED Derby's files corrupts the
+    * in-JVM instance; `shutdown=true` throws SQLException on success and
+    * on not-booted — both fine). The retry then ingests into a fresh dir:
+    * a poisoned store would reject the re-insert on the securities PK,
+    * and a fresh MemoryStream cannot resume a progressed checkpoint
+    * (round 12 review). This is harness retry hygiene, NOT
+    * drop-and-recreate inside the experiment: the supervised restart
+    * under test still reuses the live store and checkpoint.
     */
-  private def resetStore(dbPath: String, ck: String): Unit = {
-    try { java.sql.DriverManager.getConnection(s"jdbc:derby:$dbPath;shutdown=true"); () }
-    catch { case _: java.sql.SQLException => () }
-    graft.sources.Scratch.deleteRecursively(dbPath)
-    graft.sources.Scratch.deleteRecursively(ck)
+  private def ingestOnce(key: String, store: String)(
+      fill: (String, String) => Unit): String = {
+    def url(db: String) = s"jdbc:derby:$db/$store;create=true"
+    url(graft.fixtures.SessionCache.scratch(key) { db =>
+      try fill(db, url(db))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          try java.sql.DriverManager.getConnection(s"jdbc:derby:$db/$store;shutdown=true")
+          catch { case _: java.sql.SQLException => () }
+          throw e
+      }
+    })
   }
 
   /** Stream-ingest the fixture into Derby once per (application, dir);
-    * returns the JDBC url. Drop-and-recreate inside the memoized block so
-    * a failed partial ingest retries clean (the PK would otherwise reject
-    * the replayed rows).
+    * returns the JDBC url.
     */
-  private def ingest(spark: SparkSession, dir: String): String = {
-    val db = graft.sources.Scratch.dir(
-      s"e2e_jdbc|${spark.sparkContext.applicationId}|$dir")
-    val url = s"jdbc:derby:$db/e2estore;create=true"
-    ingested.computeIfAbsent(db, _ => {
-      // full reset of any FAILED prior attempt first (r12 review): dropping
-      // tables alone left the progressed checkpoint behind, and a fresh
-      // MemoryStream cannot resume those offsets — so "retries clean" was
-      // only true for the store half
-      resetStore(s"$db/e2estore", s"$db/ck")
-      createTables(url, dropFirst = true)
+  private def ingest(spark: SparkSession, dir: String): String = ingestOnce(
+      s"e2e_jdbc|${spark.sparkContext.applicationId}|$dir", "e2estore") {
+    (db, url) =>
+      createTables(url)
       // securities: BATCH insert — the reference's PrepareBatch path (A2/A4)
       graft.sources.Sinks.jdbcAppend(
         securities(spark, dir), url, "transaq_securities", connProps())
@@ -156,13 +144,7 @@ object E2eQueries {
           ms.addData(b.toSeq); q.processAllAvailable()
         }
       } finally q.stop()
-      java.lang.Boolean.TRUE
-    })
-    url
   }
-
-  private val restartIngested =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** The RESTART lineage (round 12, r11 verdict item 1): same
     * stream-ingest shape as [[ingest]], but through the EXACTLY-ONCE sink
@@ -177,17 +159,14 @@ object E2eQueries {
     * appended), so a green oracle means the sink itself is exactly-once
     * under failure, not that the harness cleaned up after it.
     */
-  private def ingestRestart(spark: SparkSession, dir: String): String = {
-    val db = graft.sources.Scratch.dir(
-      s"e2e_jdbc_restart|${spark.sparkContext.applicationId}|$dir")
-    val url = s"jdbc:derby:$db/e2erestart;create=true"
-    restartIngested.computeIfAbsent(db, _ => {
-      // reset a FAILED prior attempt (r12 review) — this restarts the whole
-      // experiment from scratch; WITHIN the experiment the supervised
-      // restart reuses the live store + checkpoint, which is the property
-      // under test (no drop-and-recreate across the kill)
-      resetStore(s"$db/e2erestart", s"$db/ck")
-      createTables(url, dropFirst = false)
+  private def ingestRestart(spark: SparkSession, dir: String): String = ingestOnce(
+      s"e2e_jdbc_restart|${spark.sparkContext.applicationId}|$dir", "e2erestart") {
+    (db, url) =>
+      // a FAILED attempt restarts the whole experiment in a fresh dir;
+      // WITHIN the experiment the supervised restart reuses the live
+      // store + checkpoint, which is the property under test (no
+      // drop-and-recreate across the kill)
+      createTables(url)
       graft.sources.Sinks.ensureEpochLedger(url, connProps())
       graft.sources.Sinks.jdbcAppend(
         securities(spark, dir), url, "transaq_securities", connProps())
@@ -224,9 +203,6 @@ object E2eQueries {
       }
       require(outcome.restarts >= 1,
         s"e2e restart fault did not fire (attempts=${outcome.attempts})")
-      java.lang.Boolean.TRUE
-    })
-    url
   }
 
   /** Read the store back the way a cluster would: trades as an 8-way
@@ -242,9 +218,6 @@ object E2eQueries {
   private[graft] def readRestartStore(spark: SparkSession, dir: String): Map[String, DataFrame] =
     readStoreFrom(spark, ingestRestart(spark, dir))
 
-  private val prunedIngested =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** The DEPLOYED configuration of the exactly-once sink (round 13, r12
     * verdict item 6 made end-to-end): [[graft.sources.Sinks.jdbcStreamAppendIdempotent]]
     * with periodic ledger pruning enabled (pruneEvery = 2,
@@ -257,13 +230,10 @@ object E2eQueries {
     * after the batch-8 prune (drop below 6), exactly batches 6..9 remain
     * at one data claim + one count marker each.
     */
-  private def ingestPruned(spark: SparkSession, dir: String): String = {
-    val db = graft.sources.Scratch.dir(
-      s"e2e_jdbc_pruned|${spark.sparkContext.applicationId}|$dir")
-    val url = s"jdbc:derby:$db/e2epruned;create=true"
-    prunedIngested.computeIfAbsent(db, _ => {
-      resetStore(s"$db/e2epruned", s"$db/ck")
-      createTables(url, dropFirst = true)
+  private def ingestPruned(spark: SparkSession, dir: String): String = ingestOnce(
+      s"e2e_jdbc_pruned|${spark.sparkContext.applicationId}|$dir", "e2epruned") {
+    (db, url) =>
+      createTables(url)
       graft.sources.Sinks.ensureEpochLedger(url, connProps())
       graft.sources.Sinks.jdbcAppend(
         securities(spark, dir), url, "transaq_securities", connProps())
@@ -296,9 +266,6 @@ object E2eQueries {
           s"pruned ledger not horizon-bounded: batches [$lo, $hi], $n rows " +
             "(expected [6, 9] at 2 rows per batch: one claim + one marker)")
       } finally conn.close()
-      java.lang.Boolean.TRUE
-    })
-    url
   }
 
   private def readStoreFrom(spark: SparkSession, url: String): Map[String, DataFrame] = {

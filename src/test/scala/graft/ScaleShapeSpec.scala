@@ -255,6 +255,28 @@ class ScaleShapeSpec extends SparkSuite {
     assert(graft.fixtures.Fixtures.embeddingsRedelivered(spark, dir).count() > 0)
   }
 
+  test("a01_stream_candles streams once per application, across clearDerivedCache") {
+    // the replay is an application-lifetime SessionCache entry: the
+    // session clear between the calls must not start a second stream
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      // QueryStartedEvent reaches session listeners synchronously
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val first = SparkEntry.queries("a01_stream_candles")(spark, dir).count()
+      graft.fixtures.Fixtures.clearDerivedCache(spark)
+      val second = SparkEntry.queries("a01_stream_candles")(spark, dir).count()
+      assert(first > 0 && second == first)
+      assert(started.get == 1, s"${started.get} streaming queries started")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("map-side pair generator law: sorted list -> exactly C(k,2) ordered pairs") {
     import spark.implicits._
     // the exact expression minhashPairs and ngramJaccard explode

@@ -192,4 +192,37 @@ class SemDedupSpec extends SparkSuite {
       .collect().map(_.getLong(0)).toSet
     assert(touched.intersect(cappedIds).isEmpty)
   }
+
+  test("guardedAssign rejects maxClusterSize < targetClusterSize before any Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (group, sentinel) = ("semdedup-fail-fast", "semdedup-fail-fast-sentinel")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `sentinel` => sentinelSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val uncached = emb.filter(col("vec_id") >= 0) // a count would run a job
+      sc.setJobGroup(group, group)
+      val e = intercept[IllegalArgumentException](
+        SemDedup.guardedAssign(uncached, targetClusterSize = 50, maxClusterSize = 25))
+      assert(e.getMessage.contains("maxClusterSize (25) must be >= targetClusterSize (50)"))
+      // listener events arrive in order: once the sentinel job is seen,
+      // any job the call started has been counted
+      sc.setJobGroup(sentinel, sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get == 0, s"${jobs.get} Spark job(s) ran before the argument check")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -18,12 +18,6 @@ import org.apache.spark.sql.SparkSession
 object KeyProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: KeyProbe <entryName> [more...]")
-    // A/B hatch: SPARK_GRAFT_NONORM=1 disables the memo's partition
-    // normalization (the fixture-scan parallelism lever) for this JVM
-    if (sys.env.get("SPARK_GRAFT_NONORM").contains("1"))
-      sys.props("graft.memo.noNormalize") = "1"
-    sys.env.get("SPARK_GRAFT_MEMO_BPP").foreach(v =>
-      sys.props("graft.memo.bytesPerPart") = v)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_PROBE_ROUNDS", "3").toInt
