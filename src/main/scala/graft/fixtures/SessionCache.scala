@@ -92,7 +92,7 @@ object SessionCache {
     * racing file (other shutdown hooks may still be flushing) must not
     * abort the cleanup of the rest, nor mask a failed fill's exception.
     */
-  private def deleteRecursively(path: String): Unit =
+  private[graft] def deleteRecursively(path: String): Unit =
     try {
       val root: Path = Paths.get(path)
       if (Files.exists(root)) {

@@ -375,8 +375,9 @@ object Sinks {
       // (embedded stores like Derby may return null — null keeps the
       // pre-scoped behavior there); escape '_' so the name is a literal,
       // not a single-char-wildcard pattern
+      // (pre-JDBC-4.1 drivers lack getSchema: AbstractMethodError)
       val schema = try Option(conn.getSchema).filter(_.nonEmpty).orNull
-                   catch { case _: Throwable => null }
+                   catch { case scala.util.control.NonFatal(_) | _: AbstractMethodError => null }
       val esc = Option(md.getSearchStringEscape).getOrElse("\\")
       def escaped(name: String): String =
         name.replace("_", esc + "_")

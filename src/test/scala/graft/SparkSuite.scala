@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for the suites — same session config as
-  * Verify/Bench (UTC, small shuffle fan-out, nanos-as-long).
+/** Shared local session for the suites: the session config of
+  * Verify/Bench ([[Mains.localSession]]) on four cores.
   */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -15,12 +15,5 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Mains.localSession(4).getOrCreate()
 }
