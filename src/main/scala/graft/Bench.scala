@@ -64,12 +64,13 @@ object Bench {
 
   /** One replay's timed micro-batches, summed from StreamingQueryProgress:
     * `add_batch_ms` is the processing, `state_commit_ms` the state-store
-    * checkpoint, `offset_log_ms` the per-batch WAL floor.
+    * checkpoint, `offset_log_ms` the per-batch WAL floor. `shards` is the
+    * largest state operator's shard count, 0 for a stateless lane.
     */
   final case class LaneResult(rowsPerSec: Long, batches: Int, triggerMs: Long,
       addBatchMs: Long, offsetLogMs: Long, planningMs: Long, stateCommitMs: Long,
       stateUpdateMs: Long, stateEvictionMs: Long, stateRows: Long,
-      stateMemMb: Long, stateDiskBytes: Long) {
+      stateMemMb: Long, shards: Long, stateDiskBytes: Long) {
     def fields: Seq[(String, Any)] =
       productElementNames.map(_.replaceAll("([A-Z])", "_$1").toLowerCase)
         .zip(productIterator).toSeq
@@ -87,6 +88,7 @@ object Bench {
       ops.map(_.allUpdatesTimeMs).sum, ops.map(_.allRemovalsTimeMs).sum,
       lastOps.headOption.map(_.numRowsTotal).getOrElse(0L),
       ops.lastOption.map(_.memoryUsedBytes / 1048576).getOrElse(0L),
+      ops.map(_.numShufflePartitions).maxOption.getOrElse(0L),
       // RocksDB lanes report their SST footprint; heap lanes have no disk
       // residence and report 0
       lastOps.map(o => Option(o.customMetrics.get("rocksdbSstFileSize"))
@@ -95,14 +97,13 @@ object Bench {
 
   /** One rep of `lane` over `batches`. The first batch is fed untimed: it
     * pays sink and state-store setup. Rows/s counts every source's copy of
-    * the timed batches. The lane's conf keys and the shuffle partition
-    * count (the streaming builders size state shards through it) are
-    * restored afterwards, unset where they were unset.
+    * the timed batches. The lane's conf keys are restored afterwards,
+    * unset where they were unset.
     */
   def replay[T](spark: SparkSession, lane: Lane[T], batches: Seq[Seq[T]],
       ckRoot: Path): LaneResult = {
     val explicit = spark.conf.getAll
-    val saved = (lane.conf.keySet + ShufflePartitions).map(k => k -> explicit.get(k))
+    val saved = lane.conf.keySet.map(k => k -> explicit.get(k))
     try {
       lane.conf.foreach { case (k, v) => spark.conf.set(k, v) }
       lane.setup()
@@ -163,25 +164,30 @@ object Bench {
     }
 
   /** The tick fixture in wire order. */
-  def ticks(spark: SparkSession, sfDir: String): Seq[Tick] = {
-    import spark.implicits._
-    Fixtures.ticks(spark, sfDir).selectExpr(
-      "secid AS secId", "sec_code AS secCode", "ts", "time", "last",
-      "open", "quantity", "tick_no AS tickNo").as[Tick]
-      .collect().sortBy(t => (t.ts.getTime, t.tickNo)).toSeq
-  }
+  def ticks(spark: SparkSession, sfDir: String): Seq[Tick] =
+    Fixtures.tickRecords(spark, sfDir).collect().sortBy(t => (t.ts.getTime, t.tickNo)).toSeq
+
+  /** `rows` in `size`-row batches, or in thirds where that would give
+    * fewer than three: the first batch is untimed, so every lane times at
+    * least two.
+    */
+  def batched[T](rows: Seq[T], size: Int): Seq[Seq[T]] =
+    if (rows.length > 2 * size) rows.grouped(size).toSeq
+    else (0 until 3).map(i => rows.slice(i * rows.length / 3, (i + 1) * rows.length / 3))
 
   /** The streaming lanes in run order. Headline lanes run `headlineReps`
     * reps; attribution lanes (_p32, _smallbatch, the RocksDB pair, the
     * exactly-once sink) run once, as comparisons against their base lane.
-    * Base lanes run the builders' key-sized state shards; the _p32 lanes
-    * pin machine-parallelism shards, which suppresses that auto-sizing.
+    * A stateful lane sets its state shard count in `conf`: its module's
+    * `StateKeys` through [[StreamTuning.shards]], or 32 on the _p32 lanes.
     */
   private def streamingLanes(spark: SparkSession, sfDir: String,
       tickBatches: Seq[Seq[Tick]], headlineReps: Int): Seq[Lane[_]] = {
     import spark.implicits._
     val day = java.time.LocalDate.of(2024, 12, 6)
-    val p32 = Map(ShufflePartitions -> "32")
+    def shards(n: Int) = Map(ShufflePartitions -> n.toString)
+    def sized(stateKeys: Long) = shards(StreamTuning.shards(spark, stateKeys))
+    val p32 = shards(32)
     val rocks = Map("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def noop(df: DataFrame, mode: String, ck: String): StreamingQuery =
@@ -201,12 +207,11 @@ object Bench {
         new Timestamp(base + r * 60000L), d.getString(1), d.getString(2))))
     }
     def docLane(name: String, reps: Int, batchSize: Int, conf: Map[String, String] = Map.empty) =
-      Lane[(Long, Timestamp, String, String)](name, reps, () => docEvents.grouped(batchSize).toSeq,
+      Lane[(Long, Timestamp, String, String)](name, reps, () => batched(docEvents, batchSize),
         (s, ck) => noop(DocStream.curationGate(s.head.toDF("doc_id", "ts", "lang", "text"),
-          "ts", "10 minutes",
-          expectedKeys = if (conf.contains(ShufflePartitions)) 0L else StreamTuning.KeysPerShard),
-          "append", ck),
-        parts = SourceParts * 4, conf = conf) // docs are ~10× fatter than ticks
+          "ts", "10 minutes"), "append", ck),
+        parts = SourceParts * 4, // docs are ~10× fatter than ticks
+        conf = sized(DocStream.StateKeys) ++ conf)
 
     def jdbcLane(name: String, reps: Int, db: String, exactlyOnce: Boolean) = {
       val url = s"jdbc:derby:memory:$db;create=true"
@@ -234,9 +239,11 @@ object Bench {
     }
 
     Seq(
-      tickLane("candles", headlineReps)(CandleStream.candles(_, day).toDF()),
-      tickLane("candles_windowed", headlineReps)(CandleStream.candlesWindowed(_, "2 minutes")),
-      tickLane("candles_p32", 1, p32)(CandleStream.candles(_, day, expectedKeys = 0).toDF()),
+      tickLane("candles", headlineReps, sized(CandleStream.StateKeys))(
+        CandleStream.candles(_, day).toDF()),
+      tickLane("candles_windowed", headlineReps, sized(CandleStream.WindowedStateKeys))(
+        CandleStream.candlesWindowed(_, "2 minutes")),
+      tickLane("candles_p32", 1, p32)(CandleStream.candles(_, day).toDF()),
       docLane("doc_gate", headlineReps, 40000),
       docLane("doc_gate_smallbatch", 1, 10000),
       docLane("doc_gate_p32", 1, 40000, p32),
@@ -246,18 +253,19 @@ object Bench {
       // ticks feed both sides of the interval join (self-join density)
       Lane[Tick]("stream_join", headlineReps, () => tickBatches.take(5), (s, ck) =>
         noop(EnrichJoin.tradeQuoteWindow(s(0).toDF(), s(1).toDF(), "30 SECONDS", "1 minute"),
-          "append", ck), sources = 2),
-      Lane[CollapseRow]("positions", headlineReps, () =>
+          "append", ck), sources = 2, conf = sized(EnrichJoin.StateKeys)),
+      Lane[CollapseRow]("positions", headlineReps, () => batched(
         Fixtures.tradesCollapsing(spark, sfDir).selectExpr("secid", "price", "quantity", "sign")
-          .as[CollapseRow].collect().toSeq.grouped(TickBatch).toSeq,
+          .as[CollapseRow].collect().toSeq, TickBatch),
         (s, ck) => noop(PositionStream.positions(s.head.toDF()), "update", ck),
-        conf = Map(ShufflePartitions -> "8")),
+        conf = shards(8)),
       Lane[SessionEvent]("sessions", headlineReps, { () =>
         val evs = Fixtures.events(spark, sfDir).selectExpr("user_id", "ts").as[SessionEvent]
           .collect().sortBy(_.ts.getTime).toSeq
         // ~10 micro-batches at every SF, so some batches are always timed
         evs.grouped(math.max(1000, evs.length / 10)).toSeq
-      }, (s, ck) => noop(SessionStream.sessions(s.head), "append", ck)),
+      }, (s, ck) => noop(SessionStream.sessions(s.head), "append", ck),
+        conf = sized(SessionStream.StateKeys)),
       jdbcLane("jdbc", headlineReps, "benchjdbc", exactlyOnce = false),
       jdbcLane("jdbc_exactly_once", 1, "benchjdbci", exactlyOnce = true))
   }
@@ -467,11 +475,11 @@ object Bench {
     currentKey.set("streaming")
     val (streamingJson, streamRps) = try {
       val tickRows = ticks(spark, sfDir)
-      val tickBatches = tickRows.grouped(TickBatch).toSeq
+      val tickBatches = batched(tickRows, TickBatch)
       val lanes = runLanes(spark,
         streamingLanes(spark, sfDir, tickBatches, math.max(2, warmPasses)))
       val body = lanes.map { case (n, r) => s"${jstr(n)}:${laneJson(r, warmPasses)}" } :+
-        s""""rows":${tickRows.length},"batch_size":$TickBatch,"batches":${tickBatches.length}"""
+        s""""rows":${tickRows.length},"batch_size":${tickBatches.head.length},"batches":${tickBatches.length}"""
       val rps = lanes.collect { case (n, Right(reps)) => s"${jstr(n)}:${reps.map(_.rowsPerSec).max}" }
       (body.mkString("{", ",", "}"), rps.mkString("{", ",", "}"))
     } catch { case NonFatal(e) =>

@@ -1,6 +1,6 @@
 package graft.fixtures
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.expr
 
 /** Deterministic transaq-shaped tables derived from the driver's TPC-H-ish
@@ -370,6 +370,15 @@ object Fixtures {
 
   def ticks(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "ticks") { ticksUncached(spark, dir) }
+
+  /** [[ticks]] as typed wire records, unordered: replays sort the
+    * collected rows by (ts, tickNo), the wire's per-security order.
+    */
+  def tickRecords(spark: SparkSession, dir: String): Dataset[graft.schema.Tick] = {
+    import spark.implicits._
+    ticks(spark, dir).selectExpr("secid AS secId", "sec_code AS secCode", "ts",
+      "time", "last", "open", "quantity", "tick_no AS tickNo").as[graft.schema.Tick]
+  }
 
   /** [[ticks]] WITHOUT the memo cache: consumers that read a strict column
     * subset (e.g. the windowed candle agg — five of the eight columns) can

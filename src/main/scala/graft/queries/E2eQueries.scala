@@ -218,6 +218,10 @@ object E2eQueries {
   private[graft] def readRestartStore(spark: SparkSession, dir: String): Map[String, DataFrame] =
     readStoreFrom(spark, ingestRestart(spark, dir))
 
+  /** The pruned store ([[ingestPruned]]), read back the same way. */
+  private[graft] def readPrunedStore(spark: SparkSession, dir: String): Map[String, DataFrame] =
+    readStoreFrom(spark, ingestPruned(spark, dir))
+
   /** The DEPLOYED configuration of the exactly-once sink (round 13, r12
     * verdict item 6 made end-to-end): [[graft.sources.Sinks.jdbcStreamAppendIdempotent]]
     * with periodic ledger pruning enabled (pruneEvery = 2,
@@ -347,7 +351,7 @@ object E2eQueries {
     */
   val e2eJdbcPruned = QueryDef.sql("e2e_jdbc_pruned",
     ChQueries.chQ13.oracle.get
-  )((s, d) => runPanelOver(s, readStoreFrom(s, ingestPruned(s, d)), 12,
+  )((s, d) => runPanelOver(s, readPrunedStore(s, d), 12,
     "not in [$sec_code_etf]", "toStartOfInterval(time,"))
 
   /** Same dashboard-JSON guard as [[ChQueries.all]] — the entries read

@@ -66,8 +66,7 @@ object EventQueries {
     * a failed replay starts in a fresh, empty dir): the replay IS what the
     * oracle hashes; re-streaming per bench rep would measure nothing new.
     * The driver-collect feed is MemoryStream's contract (fixture-scale,
-    * harness-only); the session-conf save/restore brackets the
-    * StreamTuning shard sizing.
+    * harness-only).
     */
   val evtSessionsStream = QueryDef.sql(
     "evt_sessions_stream", evtSessions.oracle.get
@@ -85,29 +84,26 @@ object EventQueries {
         .as[graft.streaming.SessionEvent]
         .collect().sortBy(e => (e.ts.getTime, e.ts.getNanos))
       val maxTs = rows.last.ts.getTime
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      val ms = MemoryStream[graft.streaming.SessionEvent](16)
+      val q = graft.streaming.SessionStream.sinkToParquet(
+        graft.streaming.SessionStream.sessions(ms.toDS()), s"$root/out",
+        s"$root/ck")
       try {
-        val ms = MemoryStream[graft.streaming.SessionEvent](16)
-        val q = graft.streaming.SessionStream.sinkToParquet(
-          graft.streaming.SessionStream.sessions(ms.toDS()), s"$root/out",
-          s"$root/ck")
-        try {
-          // ~4 micro-batches at EVERY corpus size — no fixed floor (r11
-          // advice: a 250-row floor silently shrank a sub-1000-event
-          // corpus to fewer batches, under-exercising the cross-batch
-          // session-state merge the hash oracle exists to cover)
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { b =>
-            ms.addData(b.toSeq); q.processAllAvailable()
-          }
-          // watermark flush: sentinel 1 raises max event time past every
-          // real session end; the batch carrying sentinel 2 runs WITH
-          // that watermark and emits them all (arithmetic owned by
-          // SessionStream.flushSentinels)
-          graft.streaming.SessionStream.flushSentinels(maxTs).foreach { s =>
-            ms.addData(Seq(s)); q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        // ~4 micro-batches at EVERY corpus size — no fixed floor (r11
+        // advice: a 250-row floor silently shrank a sub-1000-event
+        // corpus to fewer batches, under-exercising the cross-batch
+        // session-state merge the hash oracle exists to cover)
+        rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { b =>
+          ms.addData(b.toSeq); q.processAllAvailable()
+        }
+        // watermark flush: sentinel 1 raises max event time past every
+        // real session end; the batch carrying sentinel 2 runs WITH
+        // that watermark and emits them all (arithmetic owned by
+        // SessionStream.flushSentinels)
+        graft.streaming.SessionStream.flushSentinels(maxTs).foreach { s =>
+          ms.addData(Seq(s)); q.processAllAvailable()
+        }
+      } finally q.stop()
     }
     spark.read.parquet(s"$root/out")
       // defensive only: sentinel sessions never close, so never flush

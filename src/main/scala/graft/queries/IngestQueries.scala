@@ -523,30 +523,21 @@ object IngestQueries {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val root = graft.fixtures.SessionCache.scratch(
       s"a01_stream|${spark.sparkContext.applicationId}|$dir") { root =>
-      val tickRows = ticks(spark, dir).selectExpr(
-        "secid AS secId", "sec_code AS secCode", "ts", "time",
-        "last", "open", "quantity", "tick_no AS tickNo")
-        .as[graft.schema.Tick]
+      val tickRows = tickRecords(spark, dir)
         .collect().sortBy(t => (t.ts.getTime, t.tickNo))
-      // the candles builder key-sizes its state shards (StreamTuning) by
-      // setting the session conf; save/restore so batch entries after this
-      // one keep theirs
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      // 16-way partitioned source (micro-batches must not ship as one
+      // driver-sized task closure); ≥2 micro-batches at sf0.01+ so the
+      // oracle also covers cross-batch state
+      val ms = MemoryStream[graft.schema.Tick](16)
+      val q = graft.streaming.CandleStream.sinkToParquet(
+        graft.streaming.CandleStream.candles(
+          ms.toDS(), java.time.LocalDate.of(2024, 12, 6)),
+        s"$root/out", s"$root/ck")
       try {
-        // 16-way partitioned source (micro-batches must not ship as one
-        // driver-sized task closure); ≥2 micro-batches at sf0.01+ so the
-        // oracle also covers cross-batch state
-        val ms = MemoryStream[graft.schema.Tick](16)
-        val q = graft.streaming.CandleStream.sinkToParquet(
-          graft.streaming.CandleStream.candles(
-            ms.toDS(), java.time.LocalDate.of(2024, 12, 6)),
-          s"$root/out", s"$root/ck")
-        try {
-          tickRows.grouped(math.max(50000, tickRows.length / 4 + 1)).foreach { b =>
-            ms.addData(b.toSeq); q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        tickRows.grouped(math.max(50000, tickRows.length / 4 + 1)).foreach { b =>
+          ms.addData(b.toSeq); q.processAllAvailable()
+        }
+      } finally q.stop()
     }
     spark.read.parquet(s"$root/out").orderBy("secId", "date", "close")
   }
@@ -584,37 +575,31 @@ object IngestQueries {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val root = graft.fixtures.SessionCache.scratch(
       s"a19_reconnect|${spark.sparkContext.applicationId}|$dir") { root =>
-      val tickRows = ticks(spark, dir).selectExpr(
-        "secid AS secId", "sec_code AS secCode", "ts", "time",
-        "last", "open", "quantity", "tick_no AS tickNo")
-        .as[graft.schema.Tick]
+      val tickRows = tickRecords(spark, dir)
         .collect().sortBy(t => (t.ts.getTime, t.tickNo))
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        val ms = MemoryStream[graft.schema.Tick](16)
-        val faultKey = s"a19|$root"
-        graft.streaming.TransientFault.arm(faultKey, 1)
-        val batches =
-          tickRows.grouped(math.max(50000, tickRows.length / 4 + 1)).toSeq
-        var fed = 0
-        val outcome = graft.streaming.Supervisor.run(
-          () => graft.streaming.CandleStream.sinkToParquet(
-            graft.streaming.CandleStream.candles(
-              ms.toDS().map { t =>
-                graft.streaming.TransientFault.tripwire(faultKey); t
-              },
-              java.time.LocalDate.of(2024, 12, 6)),
-            s"$root/out", s"$root/ck"),
-          maxRestarts = 10, backoff = java.time.Duration.ZERO) { q =>
-          while (fed < batches.length) {
-            ms.addData(batches(fed)); fed += 1; q.processAllAvailable()
-          }
-          // a kill during the LAST feed leaves pending offsets: flush them
-          q.processAllAvailable()
+      val ms = MemoryStream[graft.schema.Tick](16)
+      val faultKey = s"a19|$root"
+      graft.streaming.TransientFault.arm(faultKey, 1)
+      val batches =
+        tickRows.grouped(math.max(50000, tickRows.length / 4 + 1)).toSeq
+      var fed = 0
+      val outcome = graft.streaming.Supervisor.run(
+        () => graft.streaming.CandleStream.sinkToParquet(
+          graft.streaming.CandleStream.candles(
+            ms.toDS().map { t =>
+              graft.streaming.TransientFault.tripwire(faultKey); t
+            },
+            java.time.LocalDate.of(2024, 12, 6)),
+          s"$root/out", s"$root/ck"),
+        maxRestarts = 10, backoff = java.time.Duration.ZERO) { q =>
+        while (fed < batches.length) {
+          ms.addData(batches(fed)); fed += 1; q.processAllAvailable()
         }
-        require(outcome.restarts >= 1,
-          s"a19 fault injection did not fire (attempts=${outcome.attempts})")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        // a kill during the LAST feed leaves pending offsets: flush them
+        q.processAllAvailable()
+      }
+      require(outcome.restarts >= 1,
+        s"a19 fault injection did not fire (attempts=${outcome.attempts})")
     }
     spark.read.parquet(s"$root/out").orderBy("secId", "date", "close")
   }
@@ -646,13 +631,8 @@ object IngestQueries {
   val a01CandlesReplay = QueryDef.sql(
     "a01_candles_replay", candlesReplayOracle
   ) { (spark, dir) =>
-    import spark.implicits._
-    val tickDs = ticks(spark, dir).selectExpr(
-      "secid AS secId", "sec_code AS secCode", "ts", "time",
-      "last", "open", "quantity", "tick_no AS tickNo")
-      .as[graft.schema.Tick]
     graft.streaming.CandleStream
-      .candlesBatch(tickDs, java.time.LocalDate.of(2024, 12, 6))
+      .candlesBatch(tickRecords(spark, dir), java.time.LocalDate.of(2024, 12, 6))
       .toDF()
       .orderBy("secId", "date", "close")
   }

@@ -22,18 +22,25 @@ import graft.schema.{Candle, Tick}
   */
 object CandleStream {
 
+  /** [[candles]]' state bound: live SECURITIES, one fixed-size state row
+    * each. The reference subscribes ~60 (SURVEY §2.A). Key-sized shards
+    * are the fast configuration: the r9 bench measured 48 k rows/s at
+    * machine-parallelism shards vs 105 k key-sized.
+    */
+  val StateKeys: Long = 64
+
+  /** [[candlesWindowed]]' state bound: LIVE WINDOWS, securities × open
+    * 1-minute windows inside the `delay` horizon (~hundreds at reference
+    * scale). At machine-parallelism shards the r11 bench showed this port
+    * commit-bound: state_commit 233.6 s vs the exact port's 1.7 s on the
+    * same feed, a 4× rows/s gap that is shard arithmetic, not operator
+    * cost.
+    */
+  val WindowedStateKeys: Long = 256
+
   /** Exact port of the Go state machine as keyed streaming state. Works on
     * both a streaming and a batch `Dataset[Tick]` (Spark runs
     * flatMapGroupsWithState on batch with empty initial state).
-    *
-    * `expectedKeys` — expected live SECURITIES (one fixed-size state row
-    * each) — sizes the state shard count via
-    * [[StreamTuning.sizeStateShards]] for STREAMING frames, so the
-    * default config is the fast one (the r9 bench measured 48 k rows/s
-    * at machine-parallelism shards vs 105 k key-sized; the former
-    * `_p8` lane is now simply the default). The reference subscribes
-    * ~60 securities (SURVEY §2.A), hence the default hint. Batch frames
-    * never touch the session conf; pass 0 to opt a stream out too.
     *
     * MEMORY BOUND: the `it.toSeq.sortBy` below buffers ONE security's slice
     * of ONE micro-batch on the heap to restore (ts, tickNo) order — fine at
@@ -41,11 +48,8 @@ object CandleStream {
     * but do NOT route a full-history batch replay through this operator:
     * that is what [[candlesBatch]]'s external-sort + lazy replay is for.
     */
-  def candles(ticks: Dataset[Tick], today: java.time.LocalDate,
-      expectedKeys: Long = 64): Dataset[Candle] = {
+  def candles(ticks: Dataset[Tick], today: java.time.LocalDate): Dataset[Candle] = {
     import ticks.sparkSession.implicits._
-    if (expectedKeys > 0 && ticks.isStreaming)
-      StreamTuning.sizeStateShards(ticks.sparkSession, expectedKeys)
     ticks.groupByKey(_.secId)
       .flatMapGroupsWithState[CandleCore.CandleState, Candle](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -110,31 +114,9 @@ object CandleStream {
     * aggregates stay on the fixed-width HASH fast path, partial-
     * aggregated per micro-batch before the keyed state store update.
     * StreamingSpec pins: late ticks drop, on-time windows ≡ batchCandles.
-    *
-    * `expectedKeys` — expected LIVE WINDOWS (securities × open 1-minute
-    * windows inside the `delay` horizon; ~hundreds at reference scale) —
-    * sizes the state shards like [[candles]] does (round 12, r11 verdict
-    * item 6: this port ran at machine-parallelism shards while the exact
-    * port ran key-sized, and the r11 bench showed it commit-bound —
-    * state_commit 233.6 s vs the exact port's 1.7 s on the same feed, a
-    * 4× rows/s gap that is shard arithmetic, not operator cost).
-    *
-    * CALLER-FACING BEHAVIOR CHANGE (round 12; flagged per r12 advice):
-    * with a STREAMING input and the default `expectedKeys`, this call now
-    * MUTATES the session-wide `spark.sql.shuffle.partitions` (via
-    * [[StreamTuning.sizeStateShards]], which also logs the change) —
-    * before round 12 it never touched the conf. In a mixed batch+stream
-    * session, set the conf back after `.start()` (a streaming query pins
-    * its shard count at first start; later conf changes don't affect it)
-    * or pass `expectedKeys = 0` to opt out. Batch frames never touch the
-    * session conf. This matches [[graft.streaming.SessionStream]]'s
-    * existing pattern.
     */
-  def candlesWindowed(ticks: Dataset[Tick], delay: String,
-      expectedKeys: Long = 256): org.apache.spark.sql.DataFrame = {
+  def candlesWindowed(ticks: Dataset[Tick], delay: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    if (expectedKeys > 0 && ticks.isStreaming)
-      StreamTuning.sizeStateShards(ticks.sparkSession, expectedKeys)
     val ord = when(col("last") > 0, expr(
       "CAST(CAST(unix_seconds(ts) AS DECIMAL(38,0)) * 100000000000000000 + tickNo AS DECIMAL(38,0))"))
     ticks.toDF()
@@ -152,13 +134,17 @@ object CandleStream {
         col("low"), col("volume"))
   }
 
-  /** A5 analog: micro-batch append sink. */
+  /** A5 analog: micro-batch append sink, started with [[StateKeys]]-sized
+    * state shards.
+    */
   def sinkToParquet(candles: Dataset[Candle], path: String,
       checkpoint: String): StreamingQuery =
-    candles.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .start()
+    StreamTuning.start(candles.sparkSession, StateKeys) {
+      candles.writeStream
+        .outputMode("append")
+        .format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    }
 }

@@ -19,27 +19,23 @@ import org.apache.spark.sql.functions._
   */
 object DocStream {
 
+  /** [[curationGate]]'s state bound: DISTINCT CONTENT HASHES live per
+    * watermark horizon. Key-sized shards are the fast configuration: the
+    * r9 bench measured 5.0 k rows/s with machine-parallelism shards vs
+    * 22.5 k with key-sized shards.
+    */
+  val StateKeys: Long = StreamTuning.KeysPerShard
+
   /** Streaming curation gate: per-document quality score + keep flag
     * (stateless), then FIRST-write-wins content dedup within the
     * `delay` lateness horizon — re-deliveries and exact duplicates are
     * suppressed while their suppression state is still live, and the
     * state is evicted once the watermark passes. Streaming frames only
     * (same loud contract as [[StreamDedup.firstWriteWins]]).
-    *
-    * `expectedKeys` — expected DISTINCT CONTENT HASHES live per
-    * watermark horizon (the dedup state bound) — sizes the state shard
-    * count via [[StreamTuning.sizeStateShards]] before the plan is
-    * returned, so the DEFAULT configuration is the fast one (the r9
-    * bench measured 5.0 k rows/s with machine-parallelism shards vs
-    * 22.5 k with key-sized shards). Pass 0 to leave the session's
-    * shuffle-partitions conf untouched.
     */
-  def curationGate(docs: DataFrame, tsCol: String, delay: String,
-      expectedKeys: Long = StreamTuning.KeysPerShard): DataFrame = {
+  def curationGate(docs: DataFrame, tsCol: String, delay: String): DataFrame = {
     require(docs.isStreaming,
       "curationGate is a streaming operator; use llm_curation/llm_exact_dedup for batch")
-    if (expectedKeys > 0)
-      StreamTuning.sizeStateShards(docs.sparkSession, expectedKeys)
     val scored = docs
       .withColumn("text_hash", md5(col("text")))
       .withColumn("tk", split(col("text"), " "))

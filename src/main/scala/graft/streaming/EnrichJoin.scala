@@ -30,31 +30,27 @@ import org.apache.spark.sql.functions.{col, expr}
   */
 object EnrichJoin {
 
+  /** [[tradeQuoteWindow]]'s state bound: BUFFERED ROWS live per watermark
+    * horizon across both sides, modelled on two ~50 k-row/s feeds (~half
+    * a million live rows → 8 shards). Unlike the single-store dedup gate,
+    * this operator is state-UPDATE-bound, not commit-bound: every input
+    * row is inserted into (and probed against) its side's store, work
+    * that parallelizes with shard count, while the 4-store commit cost
+    * grows with it — the r10 shard sweep on the bench feed measured
+    * 9.0 k rows/s at 2 shards, 13.1 k at 4, 20.2 k at 8, 17.1 k at 16
+    * (commit cost overtakes).
+    */
+  val StateKeys: Long = 8 * StreamTuning.KeysPerShard
+
   /** All-pairs-in-window enrichment: trade columns prefixed `t_`, quote
     * columns `q_`. Streaming frames only on both sides (the batch
     * equivalent is a plain range join; callers with batch frames get
     * told, the [[StreamDedup]] loud-failure convention).
-    *
-    * `expectedKeys` — expected BUFFERED ROWS live per watermark horizon
-    * across both sides (the join's state bound) — sizes the state shard
-    * count via [[StreamTuning.sizeStateShards]] before the plan is
-    * returned. Unlike the single-store dedup gate, this operator is
-    * state-UPDATE-bound, not commit-bound: every input row is inserted
-    * into (and probed against) its side's store, work that parallelizes
-    * with shard count, while the 4-store commit cost grows with it —
-    * the r10 shard sweep on the bench feed measured 9.0 k rows/s at 2
-    * shards, 13.1 k at 4, 20.2 k at 8, 17.1 k at 16 (commit cost
-    * overtakes). The default hint models the horizon of two ~50 k-row/s
-    * feeds (~half a million live rows → 8 shards). Pass 0 to leave the
-    * session conf untouched.
     */
   def tradeQuoteWindow(trades: DataFrame, quotes: DataFrame,
-      bound: String, delay: String,
-      expectedKeys: Long = 8 * StreamTuning.KeysPerShard): DataFrame = {
+      bound: String, delay: String): DataFrame = {
     require(trades.isStreaming && quotes.isStreaming,
       "tradeQuoteWindow is a stream-stream operator; use a plain range join for batch frames")
-    if (expectedKeys > 0)
-      StreamTuning.sizeStateShards(trades.sparkSession, expectedKeys)
     val t = trades.withWatermark("ts", delay)
       .select(col("secId").as("t_sec"), col("ts").as("t_ts"),
         col("last").as("t_price"), col("quantity").as("t_qty"),

@@ -20,7 +20,7 @@ case class SessionEvent(user_id: Long, ts: java.sql.Timestamp)
   * bounded by CONCURRENTLY OPEN sessions (live users within one gap
   * horizon), not by history — the property that lets a clickstream
   * sessionizer run forever. State shards are key-sized through the shared
-  * [[StreamTuning]] rule (session-conf override, same escape hatches).
+  * [[StreamTuning]] rule at query start ([[StateKeys]]).
   *
   * Flush contract (how a finite replay reaches the batch answer): append
   * mode holds a session in state until the watermark passes `last event +
@@ -46,6 +46,11 @@ object SessionStream {
     */
   val GapMinutes: Long = 30L
 
+  /** [[sessions]]' state bound: concurrently OPEN sessions (live users
+    * within one gap horizon).
+    */
+  val StateKeys: Long = 256
+
   /** The two flush sentinels for a replay whose max real event time is
     * `maxTsMillis` — ONE owner for the sentinel arithmetic (the entry and
     * the spec both feed these, one per micro-batch): each must clear the
@@ -69,27 +74,27 @@ object SessionStream {
     * and a flush harness's sentinels must clear that full horizon.
     */
   def sessions(events: Dataset[SessionEvent], gap: String = s"$GapMinutes minutes",
-      delay: String = "0 seconds", expectedKeys: Long = 256): DataFrame = {
-    if (expectedKeys > 0 && events.isStreaming)
-      StreamTuning.sizeStateShards(events.sparkSession, expectedKeys)
+      delay: String = "0 seconds"): DataFrame =
     events.toDF()
       .withWatermark("ts", delay)
       .groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end"), col("n_events"))
-  }
 
   /** A5 analog: micro-batch append sink (same contract as
     * [[CandleStream.sinkToParquet]] — `_spark_metadata` governs batch
-    * reads, so replays and restarts stay exactly-once).
+    * reads, so replays and restarts stay exactly-once), started with
+    * [[StateKeys]]-sized state shards.
     */
   def sinkToParquet(sessions: DataFrame, path: String,
       checkpoint: String): StreamingQuery =
-    sessions.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .start()
+    StreamTuning.start(sessions.sparkSession, StateKeys) {
+      sessions.writeStream
+        .outputMode("append")
+        .format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** State-shard sizing for the streaming operators (round 10 — the r9
   * verdict's top item: the tuned config must be the DEFAULT, not a
@@ -20,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   * Sizing rule: one shard per [[KeysPerShard]] expected live state rows,
   * floored at [[MinShards]] (keep some parallelism and headroom for skew)
   * and capped at 4× core parallelism (beyond that, commit overhead buys
-  * nothing a repartition can't). The expected-keys hint is the operator's
+  * nothing a repartition can't). `stateKeys` is the operator's
   * WATERMARK-HORIZON state bound — distinct dedup keys per horizon,
   * buffered rows per horizon for a stream-stream join — which the
   * operator's author knows and history can't change (state is evicted at
@@ -29,13 +30,10 @@ import org.apache.spark.sql.SparkSession
   * way: 10^9 live keys → ~15 k shards, far above core count, exactly
   * what a large cluster wants.
   *
-  * The builders call [[sizeStateShards]] BEFORE the plan is returned, so
-  * the conf is live when the caller starts the query. The setting is
-  * session-wide — the idiomatic deployment runs each streaming job in
-  * its own session/application, where that is precisely the intent;
-  * callers embedding a gate in a mixed batch session pass
-  * `expectedKeys = 0` to leave the session conf alone (or save/restore
-  * around `.start()`, as the bench harness does).
+  * Each stateful module states its bound once (`StateKeys`); the query
+  * that runs it starts through [[start]], which holds the sized count in
+  * the session conf only while `start()` latches it. Building a plan
+  * never touches the conf.
   */
 object StreamTuning {
 
@@ -47,39 +45,27 @@ object StreamTuning {
 
   val MinShards: Int = 4
 
-  def shardsFor(expectedKeys: Long, maxShards: Int): Int =
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  def shardsFor(stateKeys: Long, maxShards: Int): Int =
     math.max(MinShards,
       math.min(maxShards,
-        ((expectedKeys + KeysPerShard - 1) / KeysPerShard).toInt))
+        ((stateKeys + KeysPerShard - 1) / KeysPerShard).toInt))
 
-  /** Latch the state shard count for the NEXT streaming query started on
-    * this session. Returns the shard count chosen.
-    *
-    * LOUD when it changes an existing session value (round 11, r10
-    * advice): the setting is session-wide, so in a mixed batch+stream
-    * session merely BUILDING a streaming plan would otherwise silently
-    * shrink every subsequent batch shuffle. The warning names the old
-    * value and both escape hatches (expectedKeys = 0, or save/restore
-    * around `.start()` as the bench harness does).
+  /** The state shard count for `stateKeys` live state rows on this
+    * session's cores.
     */
-  private val warned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  def shards(spark: SparkSession, stateKeys: Long): Int =
+    shardsFor(stateKeys, spark.sparkContext.defaultParallelism * 4)
 
-  def sizeStateShards(spark: SparkSession, expectedKeys: Long): Int = {
-    val n = shardsFor(expectedKeys, spark.sparkContext.defaultParallelism * 4)
-    val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
-    // warn ONCE per (session, transition): the first override is the one
-    // a mixed-session caller needs to hear about; repeating it for every
-    // plan build (the bench replays builders hundreds of times) would
-    // bury the rest of the tail
-    if (!prev.contains(n.toString) && warned.add(
-        s"${spark.sparkContext.applicationId}|${prev.getOrElse("")}|$n"))
-      System.err.println(
-        s"[graft] StreamTuning: overriding session spark.sql.shuffle.partitions " +
-          s"${prev.getOrElse("(unset)")} -> $n to size streaming state shards " +
-          s"(expectedKeys=$expectedKeys). This affects SUBSEQUENT BATCH shuffles " +
-          s"too — pass expectedKeys = 0 to leave the session conf alone, or " +
-          s"save/restore the conf around query start.")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    n
+  /** Start a stateful query with [[shards]] state shards: the count is
+    * set for `body` only and the previous value restored afterwards
+    * (unset where it was unset), also when `body` throws.
+    */
+  def start(spark: SparkSession, stateKeys: Long)(body: => StreamingQuery): StreamingQuery = {
+    val prev = spark.conf.getAll.get(ShufflePartitions)
+    spark.conf.set(ShufflePartitions, shards(spark, stateKeys).toString)
+    try body
+    finally prev.fold(spark.conf.unset(ShufflePartitions))(spark.conf.set(ShufflePartitions, _))
   }
 }

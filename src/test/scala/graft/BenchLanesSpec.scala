@@ -8,7 +8,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Bench.Lane
 import graft.fixtures.SessionCache
 import graft.schema.Tick
-import graft.streaming.StreamTuning
 
 /** The bench's one streaming replay loop, on a short feed cut from the
   * sf0.001 ticks: what it times, what it counts, and what it leaves behind.
@@ -42,10 +41,9 @@ class BenchLanesSpec extends SparkSuite {
     val shuffleBefore = spark.conf.get(Shuffle)
     assert(!spark.conf.getAll.contains(Provider))
     var query: StreamingQuery = null
-    // the start function also resizes shards the way the streaming builders do
+    // a stateful lane: its state shards come from the lane's conf
     val lane = Lane[Tick]("plain", 1, () => feed, { (srcs, ck) =>
-      StreamTuning.sizeStateShards(spark, 1L << 20)
-      query = noop(srcs.head.toDF(), ck)
+      query = noop(srcs.head.dropDuplicates("tickNo").toDF(), ck)
       query
     }, conf = overrides)
     val ckRoot = Files.createTempDirectory("bench_lanes")
@@ -53,12 +51,21 @@ class BenchLanesSpec extends SparkSuite {
       val r = Bench.replay(spark, lane, feed, ckRoot)
       assert(r.batches == 3)
       assert(r.rowsPerSec > 0)
+      assert(r.shards == overrides(Shuffle).toLong)
       val first = query.recentProgress.head.batchId
       val timed = query.recentProgress.filter(_.batchId > first)
       assert(timed.map(_.numInputRows).sum == feed.tail.map(_.length).sum)
     } finally SessionCache.deleteRecursively(ckRoot.toString)
     assertConfRestored(shuffleBefore)
     assert(spark.streams.active.isEmpty)
+  }
+
+  test("batched keeps the fixed size at three batches or more and splits shorter feeds into thirds") {
+    assert(Bench.batched(1 to 30, 10).map(_.length) == Seq(10, 10, 10))
+    assert(Bench.batched(1 to 21, 10).map(_.length) == Seq(10, 10, 1))
+    assert(Bench.batched(1 to 20, 10).map(_.length) == Seq(6, 7, 7))
+    assert(Bench.batched(1 to 5, 10).map(_.length) == Seq(1, 2, 2))
+    assert(Bench.batched(1 to 20, 10).flatten == (1 to 20))
   }
 
   test("a failing lane records its own error, restores the conf, stops its query; the next lane runs") {
