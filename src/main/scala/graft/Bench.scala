@@ -14,7 +14,7 @@ import graft.fixtures.{Fixtures, SessionCache}
 import graft.schema.Tick
 import graft.sources.Sinks
 import graft.streaming.{CandleStream, CollapseRow, DocStream, EnrichJoin, PositionStream,
-  SessionEvent, SessionStream, StreamTuning}
+  Replay, SessionEvent, SessionStream, StreamTuning}
 
 /** Benchmark of every entry and streaming lane. stdout carries one
   * compact JSON line `{"metric":"total","value":N,"unit":"sec",...}`; the
@@ -163,17 +163,13 @@ object Bench {
           .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     }
 
-  /** The tick fixture in wire order. */
-  def ticks(spark: SparkSession, sfDir: String): Seq[Tick] =
-    Fixtures.tickRecords(spark, sfDir).collect().sortBy(t => (t.ts.getTime, t.tickNo)).toSeq
-
   /** `rows` in `size`-row batches, or in thirds where that would give
     * fewer than three: the first batch is untimed, so every lane times at
     * least two.
     */
   def batched[T](rows: Seq[T], size: Int): Seq[Seq[T]] =
     if (rows.length > 2 * size) rows.grouped(size).toSeq
-    else (0 until 3).map(i => rows.slice(i * rows.length / 3, (i + 1) * rows.length / 3))
+    else Replay.slices(rows, 3)
 
   /** The streaming lanes in run order. Headline lanes run `headlineReps`
     * reps; attribution lanes (_p32, _smallbatch, the RocksDB pair, the
@@ -474,7 +470,7 @@ object Bench {
 
     currentKey.set("streaming")
     val (streamingJson, streamRps) = try {
-      val tickRows = ticks(spark, sfDir)
+      val tickRows = Fixtures.wireTicks(spark, sfDir)
       val tickBatches = batched(tickRows, TickBatch)
       val lanes = runLanes(spark,
         streamingLanes(spark, sfDir, tickBatches, math.max(2, warmPasses)))

@@ -371,14 +371,20 @@ object Fixtures {
   def ticks(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "ticks") { ticksUncached(spark, dir) }
 
-  /** [[ticks]] as typed wire records, unordered: replays sort the
-    * collected rows by (ts, tickNo), the wire's per-security order.
+  /** [[ticks]] as typed wire records, unordered ([[wireTicks]] is the
+    * replay feed).
     */
   def tickRecords(spark: SparkSession, dir: String): Dataset[graft.schema.Tick] = {
     import spark.implicits._
     ticks(spark, dir).selectExpr("secid AS secId", "sec_code AS secCode", "ts",
       "time", "last", "open", "quantity", "tick_no AS tickNo").as[graft.schema.Tick]
   }
+
+  /** The tick feed in wire order, collected: sorted by (ts, tickNo), the
+    * wire's per-security order.
+    */
+  def wireTicks(spark: SparkSession, dir: String): Seq[graft.schema.Tick] =
+    tickRecords(spark, dir).collect().sortBy(t => (t.ts.getTime, t.tickNo)).toSeq
 
   /** [[ticks]] WITHOUT the memo cache: consumers that read a strict column
     * subset (e.g. the windowed candle agg — five of the eight columns) can

@@ -54,9 +54,6 @@ object Text {
     * hex string per document is a valid MinHash (md5 is uniform; hex
     * compare = value compare). Identical in both engines.
     */
-  def minhashAggs(numHashes: Int): Seq[Column] =
-    (0 until numHashes).map(i => min(md5(concat(lit(s"$i|"), col("sh")))).as(s"mh$i"))
-
   def minhashAggsSql(numHashes: Int): Seq[String] =
     (0 until numHashes).map(i => s"min(md5(concat('$i|', sh))) AS mh$i")
 

@@ -1,9 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 
 import graft.ch.ChDashboard
 import graft.fixtures.Fixtures._
+import graft.schema.TradeRow
+import graft.sources.Sinks
+import graft.streaming.{Replay, TransientFault}
 
 /** The north-star deployment shape as ONE registered lineage (round 11,
   * r10 verdict item 1). BASELINE.json names the reference architecture
@@ -13,7 +16,7 @@ import graft.fixtures.Fixtures._
   * entry exercised the full chain. These entries do, end to end:
   *
   *   1. INGEST — the trades table is replayed in wire order through a real
-  *      Structured Streaming query (MemoryStream source, micro-batch
+  *      Structured Streaming query ([[graft.streaming.Replay]], micro-batch
   *      `foreachBatch` JDBC appends — the reference's async-insert buffer,
   *      db.go:12) into an embedded Derby database; securities are
   *      batch-inserted (the reference's `PrepareBatch`+`Send` path,
@@ -68,142 +71,107 @@ object E2eQueries {
       |  "lotsize" INT, "point_cost" DOUBLE, "sectype" VARCHAR(8),
       |  "quotestype" INT, "active" VARCHAR(5))""".stripMargin
 
-  /** Run the store DDL — into a new store: every [[ingestOnce]] attempt
-    * fills a fresh scratch dir, so there is nothing to drop.
-    */
-  private def createTables(url: String): Unit = {
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      for (ddl <- Seq(TradesDdl, SecuritiesDdl)) st.executeUpdate(ddl)
-      st.close()
-    } finally conn.close()
-  }
-
-  private def wireOrderedTrades(spark: SparkSession, dir: String) = {
-    import spark.implicits._
-    trades(spark, dir).as[graft.schema.TradeRow]
-      .collect().sortBy(r => (r.time.getTime, r.time.getNanos, r.trade_no))
-  }
-
-  /** Fill a Derby store named `store` ONCE per scratch `key` — a filled
-    * [[graft.fixtures.SessionCache.scratch]] entry — and return its JDBC
-    * url. `fill` gets the scratch dir (for the checkpoint) and the url.
+  /** Fill a Derby store named `name` ONCE per (application, input dir)
+    * — a filled [[graft.fixtures.SessionCache.scratch]] entry under the
+    * key `key` — and return its JDBC url. The store gets the reference
+    * DDL (db.go:56-101), the epoch ledger of the exactly-once sink, and
+    * the securities as one BATCH insert (the reference's
+    * `PrepareBatch`+`Send` path, main.go:121-159, A2/A4). `replay` then
+    * streams the wire-ordered trades into `transaq_trades`; it gets the
+    * rows, the scratch dir (for the checkpoint) and the url, and feeds
+    * through [[TradeParts]] source partitions into [[oneWriter]].
     *
     * A FAILED attempt's embedded database is shut down before the cache
     * deletes its directory (deleting a BOOTED Derby's files corrupts the
     * in-JVM instance; `shutdown=true` throws SQLException on success and
     * on not-booted — both fine). The retry then ingests into a fresh dir:
     * a poisoned store would reject the re-insert on the securities PK,
-    * and a fresh MemoryStream cannot resume a progressed checkpoint
+    * and a fresh stream source cannot resume a progressed checkpoint
     * (round 12 review). This is harness retry hygiene, NOT
     * drop-and-recreate inside the experiment: the supervised restart
     * under test still reuses the live store and checkpoint.
     */
-  private def ingestOnce(key: String, store: String)(
-      fill: (String, String) => Unit): String = {
-    def url(db: String) = s"jdbc:derby:$db/$store;create=true"
-    url(graft.fixtures.SessionCache.scratch(key) { db =>
-      try fill(db, url(db))
-      catch {
+  private def ingestStore(spark: SparkSession, dir: String, key: String, name: String)(
+      replay: (Seq[TradeRow], String, String) => Unit): String = {
+    def url(db: String) = s"jdbc:derby:$db/$name;create=true"
+    url(graft.fixtures.SessionCache.scratch(
+        s"$key|${spark.sparkContext.applicationId}|$dir") { db =>
+      try {
+        val conn = java.sql.DriverManager.getConnection(url(db))
+        try {
+          val st = conn.createStatement()
+          for (ddl <- Seq(TradesDdl, SecuritiesDdl)) st.executeUpdate(ddl)
+          st.close()
+        } finally conn.close()
+        Sinks.ensureEpochLedger(url(db), connProps())
+        Sinks.jdbcAppend(securities(spark, dir), url(db), "transaq_securities", connProps())
+        replay(trades(spark, dir).as[TradeRow].collect()
+          .sortBy(r => (r.time.getTime, r.time.getNanos, r.trade_no)).toSeq, db, url(db))
+      } catch {
         case scala.util.control.NonFatal(e) =>
-          try java.sql.DriverManager.getConnection(s"jdbc:derby:$db/$store;shutdown=true")
+          try java.sql.DriverManager.getConnection(s"jdbc:derby:$db/$name;shutdown=true")
           catch { case _: java.sql.SQLException => () }
           throw e
       }
     })
   }
 
-  /** Stream-ingest the fixture into Derby once per (application, dir);
-    * returns the JDBC url.
+  private implicit val tradeRowEncoder: Encoder[TradeRow] = Encoders.product[TradeRow]
+
+  /** 64 source partitions: a 15k-row trade batch over 16 shipped
+    * ~1.26 MB task closures (over the 1 MB guideline — the tail WARN the
+    * r13 asserted bench caught); 64 keeps slices ~0.3 MB.
     */
-  private def ingest(spark: SparkSession, dir: String): String = ingestOnce(
-      s"e2e_jdbc|${spark.sparkContext.applicationId}|$dir", "e2estore") {
-    (db, url) =>
-      createTables(url)
-      // securities: BATCH insert — the reference's PrepareBatch path (A2/A4)
-      graft.sources.Sinks.jdbcAppend(
-        securities(spark, dir), url, "transaq_securities", connProps())
-      // trades: STREAMING ingest — wire-ordered micro-batches through the
-      // A5 JDBC sink. repartition(1) before the sink: embedded Derby's
-      // single-JVM lock table turns concurrent writers into a contention
-      // benchmark (measured in the bench's jdbc lane); one writer is the
-      // harness shape — a cluster sink would keep the source partitioning.
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = wireOrderedTrades(spark, dir)
-      // 64 source partitions: a 15k-row trade batch over 16 shipped
-      // ~1.26 MB task closures (over the 1 MB guideline — the tail WARN
-      // the r13 asserted bench caught); 64 keeps slices ~0.3 MB
-      val ms = MemoryStream[graft.schema.TradeRow](64)
-      val q = graft.sources.Sinks.jdbcStreamAppend(
-        ms.toDS().repartition(1), url, "transaq_trades", connProps(), s"$db/ck")
-      try {
-        rows.grouped(math.max(50000, rows.length / 4 + 1)).foreach { b =>
-          ms.addData(b.toSeq); q.processAllAvailable()
-        }
-      } finally q.stop()
-  }
+  private val TradeParts = 64
+
+  /** One writer into the store: embedded Derby's single-JVM lock table
+    * turns concurrent writers into a contention benchmark (measured in
+    * the bench's jdbc lane); a cluster sink would keep the source
+    * partitioning.
+    */
+  private def oneWriter(trades: Dataset[TradeRow]): Dataset[TradeRow] = trades.repartition(1)
+
+  /** Stream-ingest the fixture trades through the plain JDBC append sink
+    * (the A5 path; each micro-batch is the reference's async-insert
+    * buffer, db.go:12); returns the JDBC url.
+    */
+  private def ingest(spark: SparkSession, dir: String): String =
+    ingestStore(spark, dir, "e2e_jdbc", "e2estore") { (rows, db, url) =>
+      Replay.run(spark, Replay.batches(rows), TradeParts) { trades =>
+        Sinks.jdbcStreamAppend(oneWriter(trades), url, "transaq_trades", connProps(), s"$db/ck")
+      }
+    }
 
   /** The RESTART lineage (round 12, r11 verdict item 1): same
     * stream-ingest shape as [[ingest]], but through the EXACTLY-ONCE sink
-    * ([[graft.sources.Sinks.jdbcStreamAppendIdempotent]]) with a
+    * ([[graft.sources.Sinks.jdbcBatchIdempotent]] per micro-batch) with a
     * deterministic kill landing in the exact window plain append
     * double-inserts on: the armed [[graft.streaming.TransientFault]]
     * trips INSIDE `foreachBatch`, AFTER the Derby transaction commits and
     * BEFORE the micro-batch's checkpoint commit. The supervised restart
-    * ([[graft.streaming.Supervisor.run]]) replays that micro-batch from
-    * the offset WAL; the epoch ledger makes the replay a no-op — NO
+    * ([[Replay.supervised]]) replays that micro-batch from the offset
+    * WAL; the epoch ledger makes the replay a no-op — NO
     * drop-and-recreate anywhere (the tables are created once and only
     * appended), so a green oracle means the sink itself is exactly-once
     * under failure, not that the harness cleaned up after it.
     */
-  private def ingestRestart(spark: SparkSession, dir: String): String = ingestOnce(
-      s"e2e_jdbc_restart|${spark.sparkContext.applicationId}|$dir", "e2erestart") {
-    (db, url) =>
-      // a FAILED attempt restarts the whole experiment in a fresh dir;
-      // WITHIN the experiment the supervised restart reuses the live
-      // store + checkpoint, which is the property under test (no
-      // drop-and-recreate across the kill)
-      createTables(url)
-      graft.sources.Sinks.ensureEpochLedger(url, connProps())
-      graft.sources.Sinks.jdbcAppend(
-        securities(spark, dir), url, "transaq_securities", connProps())
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = wireOrderedTrades(spark, dir)
-      // 64 source partitions — same closure-size reasoning as [[ingest]]
-      val ms = MemoryStream[graft.schema.TradeRow](64)
+  private def ingestRestart(spark: SparkSession, dir: String): String =
+    ingestStore(spark, dir, "e2e_jdbc_restart", "e2erestart") { (rows, db, url) =>
       val faultKey = s"e2e_restart|$db"
-      graft.streaming.TransientFault.arm(faultKey, 1)
-      val batches = rows.grouped(math.max(50000, rows.length / 4 + 1)).toSeq
-      var fed = 0
-      val outcome = graft.streaming.Supervisor.run(
-        () => ms.toDS().repartition(1).writeStream
+      Replay.supervised(spark, Replay.batches(rows), TradeParts, faultKey) { trades =>
+        oneWriter(trades).writeStream
           .outputMode("append")
           .option("checkpointLocation", s"$db/ck")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.schema.TradeRow],
-              batchId: Long) =>
-            graft.sources.Sinks.jdbcBatchIdempotent(
-              b.toDF(), url, "transaq_trades", connProps(),
+          .foreachBatch { (b: Dataset[TradeRow], batchId: Long) =>
+            Sinks.jdbcBatchIdempotent(b.toDF(), url, "transaq_trades", connProps(),
               "e2e_trades", batchId)
             // the kill lands AFTER the store commit, BEFORE the checkpoint
             // commit — the double-insert window under test
-            graft.streaming.TransientFault.tripwire(faultKey)
+            TransientFault.tripwire(faultKey)
           }
-          .start(),
-        maxRestarts = 10, backoff = java.time.Duration.ZERO) { q =>
-        while (fed < batches.length) {
-          ms.addData(batches(fed)); fed += 1; q.processAllAvailable()
-        }
-        // a kill during the last feed leaves pending offsets: flush them
-        q.processAllAvailable()
+          .start()
       }
-      require(outcome.restarts >= 1,
-        s"e2e restart fault did not fire (attempts=${outcome.attempts})")
-  }
+    }
 
   /** Read the store back the way a cluster would: trades as an 8-way
     * keyed-range partitioned scan (bounds via two scalar JDBC lookups —
@@ -234,43 +202,26 @@ object E2eQueries {
     * after the batch-8 prune (drop below 6), exactly batches 6..9 remain
     * at one data claim + one count marker each.
     */
-  private def ingestPruned(spark: SparkSession, dir: String): String = ingestOnce(
-      s"e2e_jdbc_pruned|${spark.sparkContext.applicationId}|$dir", "e2epruned") {
-    (db, url) =>
-      createTables(url)
-      graft.sources.Sinks.ensureEpochLedger(url, connProps())
-      graft.sources.Sinks.jdbcAppend(
-        securities(spark, dir), url, "transaq_securities", connProps())
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = wireOrderedTrades(spark, dir)
-      val ms = MemoryStream[graft.schema.TradeRow](64)
-      val q = graft.sources.Sinks.jdbcStreamAppendIdempotent(
-        ms.toDS().repartition(1), url, "transaq_trades", connProps(),
-        s"$db/ck", "e2e_pruned_trades", pruneEvery = 2, minBatchesToRetain = 2)
-      try {
-        // exactly 10 contiguous micro-batches at any SF (the rebounce
-        // slicing discipline — `grouped` yields 10 only for some sizes)
-        val nB = 10
-        (0 until nB).foreach { i =>
-          ms.addData(rows.slice(i * rows.length / nB,
-            (i + 1) * rows.length / nB).toSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
+  private def ingestPruned(spark: SparkSession, dir: String): String =
+    ingestStore(spark, dir, "e2e_jdbc_pruned", "e2epruned") { (rows, db, url) =>
+      // exactly 10 contiguous micro-batches at any SF (the rebounce
+      // slicing discipline — `grouped` yields 10 only for some sizes)
+      Replay.run(spark, Replay.slices(rows, 10), TradeParts) { trades =>
+        Sinks.jdbcStreamAppendIdempotent(oneWriter(trades), url, "transaq_trades",
+          connProps(), s"$db/ck", "e2e_pruned_trades", pruneEvery = 2, minBatchesToRetain = 2)
+      }
       val conn = java.sql.DriverManager.getConnection(url)
       try {
         val rs = conn.createStatement().executeQuery(
           s"""SELECT MIN("batch_id"), MAX("batch_id"), COUNT(*)
-             |FROM ${graft.sources.Sinks.EpochLedgerTable}""".stripMargin)
+             |FROM ${Sinks.EpochLedgerTable}""".stripMargin)
         rs.next()
         val (lo, hi, n) = (rs.getLong(1), rs.getLong(2), rs.getLong(3))
         require(lo == 6 && hi == 9 && n == 8,
           s"pruned ledger not horizon-bounded: batches [$lo, $hi], $n rows " +
             "(expected [6, 9] at 2 rows per batch: one claim + one marker)")
       } finally conn.close()
-  }
+    }
 
   private def readStoreFrom(spark: SparkSession, url: String): Map[String, DataFrame] = {
     val props = connProps()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.fixtures.Fixtures._
+import graft.streaming.{Replay, SessionEvent, SessionStream}
 
 /** Event-stream operators over the `events` table — the operator classes
   * a telemetry/clickstream consumer of the engine needs beyond the
@@ -65,15 +66,13 @@ object EventQueries {
     * [[graft.fixtures.SessionCache.scratch]] entry like a01 (a retry after
     * a failed replay starts in a fresh, empty dir): the replay IS what the
     * oracle hashes; re-streaming per bench rep would measure nothing new.
-    * The driver-collect feed is MemoryStream's contract (fixture-scale,
-    * harness-only).
+    * The driver-collect feed is [[graft.streaming.Replay]]'s contract
+    * (fixture-scale, harness-only).
     */
   val evtSessionsStream = QueryDef.sql(
     "evt_sessions_stream", evtSessions.oracle.get
   ) { (spark, dir) =>
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val root = graft.fixtures.SessionCache.scratch(
       s"evt_sessions_stream|${spark.sparkContext.applicationId}|$dir") { root =>
       // in-order wire (no late drops): sort by the FULL timestamp — the
@@ -81,29 +80,21 @@ object EventQueries {
       // sub-ms neighbors (r11 advice; harmless today only because the
       // acceptance horizon tolerates it, but the claim should be true)
       val rows = events(spark, dir).select(col("user_id"), col("ts"))
-        .as[graft.streaming.SessionEvent]
-        .collect().sortBy(e => (e.ts.getTime, e.ts.getNanos))
-      val maxTs = rows.last.ts.getTime
-      val ms = MemoryStream[graft.streaming.SessionEvent](16)
-      val q = graft.streaming.SessionStream.sinkToParquet(
-        graft.streaming.SessionStream.sessions(ms.toDS()), s"$root/out",
-        s"$root/ck")
-      try {
-        // ~4 micro-batches at EVERY corpus size — no fixed floor (r11
-        // advice: a 250-row floor silently shrank a sub-1000-event
-        // corpus to fewer batches, under-exercising the cross-batch
-        // session-state merge the hash oracle exists to cover)
-        rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { b =>
-          ms.addData(b.toSeq); q.processAllAvailable()
-        }
-        // watermark flush: sentinel 1 raises max event time past every
-        // real session end; the batch carrying sentinel 2 runs WITH
-        // that watermark and emits them all (arithmetic owned by
-        // SessionStream.flushSentinels)
-        graft.streaming.SessionStream.flushSentinels(maxTs).foreach { s =>
-          ms.addData(Seq(s)); q.processAllAvailable()
-        }
-      } finally q.stop()
+        .as[SessionEvent]
+        .collect().sortBy(e => (e.ts.getTime, e.ts.getNanos)).toSeq
+      // ~4 micro-batches at EVERY corpus size — no fixed floor (r11
+      // advice: a 250-row floor silently shrank a sub-1000-event corpus
+      // to fewer batches, under-exercising the cross-batch session-state
+      // merge the hash oracle exists to cover); then the watermark flush,
+      // one sentinel per batch: sentinel 1 raises max event time past
+      // every real session end, and the batch carrying sentinel 2 runs
+      // WITH that watermark and emits them all (arithmetic owned by
+      // SessionStream.flushSentinels)
+      val batches = Replay.batches(rows, minRows = 1) ++
+        SessionStream.flushSentinels(rows.last.ts.getTime).map(Seq(_))
+      Replay.run(spark, batches, 16) { evs =>
+        SessionStream.sinkToParquet(SessionStream.sessions(evs), s"$root/out", s"$root/ck")
+      }
     }
     spark.read.parquet(s"$root/out")
       // defensive only: sentinel sessions never close, so never flush

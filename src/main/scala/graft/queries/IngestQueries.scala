@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.Fixtures._
 import graft.ingest.{CandleBuilder, Collapse, Dedup, Filters, Parse, Positions}
 import graft.schema.Schemas
+import graft.streaming.{CandleStream, Replay, TransientFault}
 
 /** Query registrations for the §2.A ingestion/transform layer — each
   * operator exercised end-to-end over its fixture with a DuckDB oracle.
@@ -487,10 +488,14 @@ object IngestQueries {
       |  WHERE b.lz IS NULL OR m.rn > b.lz
       |  GROUP BY m.secid, m.seg_id)""".stripMargin)
 
+  /** The tick replays' process date and source partitions. */
+  private val StreamDay = java.time.LocalDate.of(2024, 12, 6)
+  private val StreamParts = 16
+
   /** A1/A5/A16 (stateful path) — the ACTUAL STREAMING PORT, fully
     * oracled (round 10, r9 verdict item 2: the surface's one remaining
     * `no_oracle` row). The entry replays the tick fixture in wire order
-    * through the real Structured Streaming query — MemoryStream source →
+    * through the real Structured Streaming query — [[Replay]] feed →
     * [[graft.streaming.CandleStream.candles]] (the keyed
     * flatMapGroupsWithState state machine) → parquet APPEND sink
     * ([[graft.streaming.CandleStream.sinkToParquet]], the A5 path) — and
@@ -519,25 +524,14 @@ object IngestQueries {
     "a01_stream_candles", candlesReplayOracle
   ) { (spark, dir) =>
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val root = graft.fixtures.SessionCache.scratch(
       s"a01_stream|${spark.sparkContext.applicationId}|$dir") { root =>
-      val tickRows = tickRecords(spark, dir)
-        .collect().sortBy(t => (t.ts.getTime, t.tickNo))
-      // 16-way partitioned source (micro-batches must not ship as one
-      // driver-sized task closure); ≥2 micro-batches at sf0.01+ so the
-      // oracle also covers cross-batch state
-      val ms = MemoryStream[graft.schema.Tick](16)
-      val q = graft.streaming.CandleStream.sinkToParquet(
-        graft.streaming.CandleStream.candles(
-          ms.toDS(), java.time.LocalDate.of(2024, 12, 6)),
-        s"$root/out", s"$root/ck")
-      try {
-        tickRows.grouped(math.max(50000, tickRows.length / 4 + 1)).foreach { b =>
-          ms.addData(b.toSeq); q.processAllAvailable()
-        }
-      } finally q.stop()
+      // ≥2 micro-batches at sf0.01+ so the oracle also covers cross-batch
+      // state
+      Replay.run(spark, Replay.batches(wireTicks(spark, dir)), StreamParts) { ticks =>
+        CandleStream.sinkToParquet(CandleStream.candles(ticks, StreamDay),
+          s"$root/out", s"$root/ck")
+      }
     }
     spark.read.parquet(s"$root/out").orderBy("secId", "date", "close")
   }
@@ -571,35 +565,15 @@ object IngestQueries {
     "a19_reconnect_replay", candlesReplayOracle
   ) { (spark, dir) =>
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val root = graft.fixtures.SessionCache.scratch(
       s"a19_reconnect|${spark.sparkContext.applicationId}|$dir") { root =>
-      val tickRows = tickRecords(spark, dir)
-        .collect().sortBy(t => (t.ts.getTime, t.tickNo))
-      val ms = MemoryStream[graft.schema.Tick](16)
       val faultKey = s"a19|$root"
-      graft.streaming.TransientFault.arm(faultKey, 1)
-      val batches =
-        tickRows.grouped(math.max(50000, tickRows.length / 4 + 1)).toSeq
-      var fed = 0
-      val outcome = graft.streaming.Supervisor.run(
-        () => graft.streaming.CandleStream.sinkToParquet(
-          graft.streaming.CandleStream.candles(
-            ms.toDS().map { t =>
-              graft.streaming.TransientFault.tripwire(faultKey); t
-            },
-            java.time.LocalDate.of(2024, 12, 6)),
-          s"$root/out", s"$root/ck"),
-        maxRestarts = 10, backoff = java.time.Duration.ZERO) { q =>
-        while (fed < batches.length) {
-          ms.addData(batches(fed)); fed += 1; q.processAllAvailable()
-        }
-        // a kill during the LAST feed leaves pending offsets: flush them
-        q.processAllAvailable()
+      Replay.supervised(spark, Replay.batches(wireTicks(spark, dir)), StreamParts,
+        faultKey) { ticks =>
+        CandleStream.sinkToParquet(
+          CandleStream.candles(ticks.map { t => TransientFault.tripwire(faultKey); t }, StreamDay),
+          s"$root/out", s"$root/ck")
       }
-      require(outcome.restarts >= 1,
-        s"a19 fault injection did not fire (attempts=${outcome.attempts})")
     }
     spark.read.parquet(s"$root/out").orderBy("secId", "date", "close")
   }
@@ -631,8 +605,7 @@ object IngestQueries {
   val a01CandlesReplay = QueryDef.sql(
     "a01_candles_replay", candlesReplayOracle
   ) { (spark, dir) =>
-    graft.streaming.CandleStream
-      .candlesBatch(tickRecords(spark, dir), java.time.LocalDate.of(2024, 12, 6))
+    CandleStream.candlesBatch(tickRecords(spark, dir), StreamDay)
       .toDF()
       .orderBy("secId", "date", "close")
   }

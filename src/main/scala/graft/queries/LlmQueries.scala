@@ -5241,6 +5241,14 @@ object LlmQueries {
           t.setDaemon(true); t
         }))
 
+  /** The values of `futures`, awaited in order. Every future is waited
+    * for before the first failure is rethrown, so a failed fan-out leaves
+    * none of its Spark jobs running behind the caller.
+    */
+  private[graft] def awaitAll[T](futures: Seq[scala.concurrent.Future[T]]): Seq[T] =
+    futures.map(f => scala.util.Try(
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))).map(_.get)
+
   /** Brute-force exact cosine top-10 ground truth (the embedTopk plan). */
   private def exactCosTop10(emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val q = emb.filter(col("vec_id") < NumQueries)
@@ -5370,8 +5378,7 @@ object LlmQueries {
     // recomputes every approximate method (only the ground truth and the
     // trained codebook are session-memoized), and the values are those
     // of the identical lazy plans.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.Future
     implicit val ec: scala.concurrent.ExecutionContext = ledgerPool
     val exactF = Future(graft.fixtures.Fixtures.derived(spark, dir,
       "ann_exact_top10")(exactCosTop10(emb)))
@@ -5413,15 +5420,10 @@ object LlmQueries {
         Window.partitionBy("query_id").orderBy(col("d").desc, col("vec_id"))))
       .filter(col("rank") <= 10).select(col("query_id"), col("vec_id"))
     val sqF = Future(graft.fixtures.Fixtures.materialized(sq10))
-    val exact10 = Await.result(exactF, Duration.Inf)
+    val methods = Seq("a_exact", "ivf", "lsh", "pq", "sq")
+      .zip(awaitAll(Seq(exactF, ivfF, lshF, pqF, sqF)))
     // one union, one aggregate — the shared ledger tail
-    recallLedger(spark,
-      Seq("a_exact" -> exact10,
-        "ivf" -> Await.result(ivfF, Duration.Inf),
-        "lsh" -> Await.result(lshF, Duration.Inf),
-        "pq" -> Await.result(pqF, Duration.Inf),
-        "sq" -> Await.result(sqF, Duration.Inf)),
-      LedgerBytes.toSeq.sorted, exact10)
+    recallLedger(spark, methods, LedgerBytes.toSeq.sorted, methods.head._2)
   }
 
   /** Matryoshka truncation widths (prefix dims) for [[mrlRecall]];

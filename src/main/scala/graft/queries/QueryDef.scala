@@ -15,8 +15,6 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, withFunctions(fn), Some(oracle))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, withFunctions(fn), None)
   // every query sees the engine's SQL function surface (registration is
   // idempotent per session)
   private def withFunctions(

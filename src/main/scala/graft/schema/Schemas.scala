@@ -49,9 +49,6 @@ object Schemas {
     StructField("active", StringType, nullable = false) // wire-side field (main.go:141)
   ))
 
-  val securitiesKey: Seq[String] =
-    Seq("seccode", "instrclass", "board", "market", "sectype", "quotestype")
-
   /** transaq_candles — OHLCV bars (db.go:22-32). */
   val candles: StructType = StructType(Seq(
     StructField("date", TimestampType, nullable = false),
@@ -63,8 +60,6 @@ object Schemas {
     StructField("low", DoubleType, nullable = false),
     StructField("volume", LongType, nullable = false)
   ))
-
-  val candlesKey: Seq[String] = Seq("date", "sec_code", "period")
 
   /** transaq_quotes — order-book snapshots (db.go:96-108). */
   val quotes: StructType = StructType(Seq(
@@ -149,9 +144,9 @@ case class Candle(
     volume: Long)
 
 /** Storage-shaped trade row (db.go:56-63 column set) — the encoder the
-  * end-to-end streaming-ingest entries replay through MemoryStream; field
-  * names match the engine's trades table so `as[TradeRow]`/`toDF()` are
-  * column-exact round trips.
+  * end-to-end streaming-ingest entries replay through
+  * [[graft.streaming.Replay]]; field names match the engine's trades
+  * table so `as[TradeRow]`/`toDF()` are column-exact round trips.
   */
 case class TradeRow(
     time: java.sql.Timestamp,

@@ -26,7 +26,7 @@ object Sources {
     spark.read.schema(schema).parquet(path)
 
   /** A1-analog file stream: tails a directory of parquet drops with the
-    * same schema as the batch path (tests feed it via MemoryStream
+    * same schema as the batch path (tests feed it from an in-memory stream
     * instead — see StreamingSpec — since the semantics live in the
     * transforms, not the transport).
     */

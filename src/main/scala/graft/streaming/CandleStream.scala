@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.ingest.CandleCore
 import graft.schema.{Candle, Tick}
+import graft.sources.Sinks
 
 /** A1/A5/A16 streaming slice — the reference IS a streaming ETL
   * (/root/reference/process.go:15-67): typed tick stream → per-security
@@ -139,12 +140,6 @@ object CandleStream {
     */
   def sinkToParquet(candles: Dataset[Candle], path: String,
       checkpoint: String): StreamingQuery =
-    StreamTuning.start(candles.sparkSession, StateKeys) {
-      candles.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
+    StreamTuning.start(candles.sparkSession, StateKeys)(
+      Sinks.streamAppend(candles, path, checkpoint))
 }

@@ -17,7 +17,7 @@ case class CollapseRow(secid: Int, price: Double, quantity: Long, sign: Int)
   * corrections arriving hours after the original state need NO
   * keyed-row-store lookback, no watermark, no per-key collapse pass.
   * Batch/stream parity is exact because the aggregate is a commutative
-  * fold — CollapseSpec replays the fixture through MemoryStream and
+  * fold — CollapseSpec replays the fixture through an in-memory stream and
   * asserts equality with the batch `qx_collapsing_turnover` numbers.
   */
 object PositionStream {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.Sinks
+
 /** One user event on the streaming wire (the `events` fixture's
   * sessionization projection).
   */
@@ -89,12 +91,6 @@ object SessionStream {
     */
   def sinkToParquet(sessions: DataFrame, path: String,
       checkpoint: String): StreamingQuery =
-    StreamTuning.start(sessions.sparkSession, StateKeys) {
-      sessions.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
+    StreamTuning.start(sessions.sparkSession, StateKeys)(
+      Sinks.streamAppend(sessions, path, checkpoint))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Bench.Lane
-import graft.fixtures.SessionCache
+import graft.fixtures.{Fixtures, SessionCache}
 import graft.schema.Tick
 
 /** The bench's one streaming replay loop, on a short feed cut from the
@@ -22,7 +22,7 @@ class BenchLanesSpec extends SparkSuite {
   // four batches of unequal size, so a count that kept the untimed first
   // batch (or dropped a timed one) cannot match by accident
   private lazy val feed: Seq[Seq[Tick]] = {
-    val ticks = Bench.ticks(spark, dir)
+    val ticks = Fixtures.wireTicks(spark, dir)
     val sizes = Seq(40, 30, 20, 10)
     sizes.indices.map(i => ticks.slice(sizes.take(i).sum, sizes.take(i + 1).sum))
   }
