@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.fixtures.Fixtures._
-import graft.streaming.{Replay, SessionEvent, SessionStream}
+import graft.streaming.{Replay, SessionEvent, SessionStream, StreamTuning}
 
 /** Event-stream operators over the `events` table — the operator classes
   * a telemetry/clickstream consumer of the engine needs beyond the
@@ -89,11 +89,15 @@ object EventQueries {
       // one sentinel per batch: sentinel 1 raises max event time past
       // every real session end, and the batch carrying sentinel 2 runs
       // WITH that watermark and emits them all (arithmetic owned by
-      // SessionStream.flushSentinels)
+      // SessionStream.flushSentinels). Since the sentinels close every
+      // session, the engine's no-data batch after each watermark move
+      // adds nothing but a state commit: the query runs without them,
+      // one micro-batch per fed batch.
       val batches = Replay.batches(rows, minRows = 1) ++
         SessionStream.flushSentinels(rows.last.ts.getTime).map(Seq(_))
       Replay.run(spark, batches, 16) { evs =>
-        SessionStream.sinkToParquet(SessionStream.sessions(evs), s"$root/out", s"$root/ck")
+        StreamTuning.scoped(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(
+          SessionStream.sinkToParquet(SessionStream.sessions(evs), s"$root/out", s"$root/ck"))
       }
     }
     spark.read.parquet(s"$root/out")

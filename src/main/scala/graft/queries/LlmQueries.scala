@@ -698,7 +698,7 @@ object LlmQueries {
 
   // ---- embedding similarity ----
 
-  private val NumQueries = 5
+  private[graft] val NumQueries = 5
   private val IvfK = 16
   private val IvfProbes = 2
 
@@ -5153,8 +5153,8 @@ object LlmQueries {
     val exact = graft.fixtures.Fixtures.derived(spark, dir,
       "sq_exact_top10")(top10(Embed.dotExpr("qqv", "qv")))
     val approx = top10(Embed.dotExpr("qcodes", "codes"))
-    exact.join(approx.withColumn("hit", lit(1L)),
-        Seq("query_id", "vec_id"), "left")
+    exact.withColumn("hit_key", hitKey)
+      .join(approx.select(hitKey.as("hit_key"), lit(1L).as("hit")), Seq("hit_key"), "left")
       .groupBy("query_id")
       .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
       .selectExpr("query_id", "n_overlap",
@@ -5256,24 +5256,34 @@ object LlmQueries {
     cosTop10Over(emb.join(broadcast(q), col("vec_id") =!= col("query_id")))
   }
 
-  /** Spark tail: union the per-method top-10 lists, count hits against
-    * the ground truth, attach the memory column.
+  /** A top-10 hit `(query_id, vec_id)` as one BIGINT join key. Exact:
+    * every query id is a corpus id in [0, [[NumQueries]]), so the key
+    * decodes back, and it cannot overflow below ~1.8e18 vector ids. A
+    * broadcast join on one integral key builds a `LongHashedRelation`;
+    * on a STRING or two-column key it builds an `UnsafeHashedRelation`,
+    * whose map takes a whole memory page (16 MiB at a 3 GB heap) for 50
+    * rows — and the returned plan keeps that page alive for as long as
+    * the caller holds the result.
     */
-  private def recallLedger(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def hitKey: org.apache.spark.sql.Column =
+    col("vec_id").cast("long") * NumQueries + col("query_id")
+
+  /** Spark tail: union the per-method top-10 lists, count hits against
+    * the ground truth, attach the memory column (a literal map lookup:
+    * every method has an entry, so ANSI mode never sees a missing key).
+    */
+  private def recallLedger(
       methods: Seq[(String, org.apache.spark.sql.DataFrame)],
-      bytesRows: Seq[(String, Long)],
+      bytes: Map[String, Long],
       exact10: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val uni = methods.map { case (m, df) =>
-      df.select(lit(m).as("method"), col("query_id"), col("vec_id"))
-    }.reduce(_.unionAll(_))
-    val bytesDf = bytesRows.map { case (m, b) =>
-      spark.range(1).select(lit(m).as("method"), lit(b).as("bytes"))
+      df.select(lit(m).as("method"), hitKey.as("hit_key"))
     }.reduce(_.unionAll(_))
     val xagg = exact10.agg(count(lit(1)).as("n_exact"))
-    uni.join(exact10.withColumn("hit", lit(1L)), Seq("query_id", "vec_id"), "left")
+    uni.join(exact10.select(hitKey.as("hit_key"), lit(1L).as("hit")), Seq("hit_key"), "left")
       .groupBy("method")
       .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .join(broadcast(bytesDf), "method")
+      .withColumn("bytes", element_at(typedLit(bytes), col("method")))
       .crossJoin(broadcast(xagg))
       .selectExpr("method", "CAST(n_exact AS BIGINT) AS n_exact",
         "CAST(n_hits AS BIGINT) AS n_hits",
@@ -5423,7 +5433,7 @@ object LlmQueries {
     val methods = Seq("a_exact", "ivf", "lsh", "pq", "sq")
       .zip(awaitAll(Seq(exactF, ivfF, lshF, pqF, sqF)))
     // one union, one aggregate — the shared ledger tail
-    recallLedger(spark, methods, LedgerBytes.toSeq.sorted, methods.head._2)
+    recallLedger(methods, LedgerBytes, methods.head._2)
   }
 
   /** Matryoshka truncation widths (prefix dims) for [[mrlRecall]];
@@ -5497,8 +5507,8 @@ object LlmQueries {
           Window.partitionBy("query_id").orderBy(col("cs").desc, col("vec_id"))))
         .filter(col("rank") <= 10).select(col("query_id"), col("vec_id"))
     }
-    recallLedger(spark, MrlDims.map(m => s"mrl$m" -> mrlTop(m)),
-      MrlDims.map(m => s"mrl$m" -> 4L * m), exact10)
+    recallLedger(MrlDims.map(m => s"mrl$m" -> mrlTop(m)),
+      MrlDims.map(m => s"mrl$m" -> 4L * m).toMap, exact10)
   }
 
   /** CORPUS DRIFT MONITORING — the distribution-shift gate every

@@ -62,10 +62,19 @@ object StreamTuning {
     * set for `body` only and the previous value restored afterwards
     * (unset where it was unset), also when `body` throws.
     */
-  def start(spark: SparkSession, stateKeys: Long)(body: => StreamingQuery): StreamingQuery = {
-    val prev = spark.conf.getAll.get(ShufflePartitions)
-    spark.conf.set(ShufflePartitions, shards(spark, stateKeys).toString)
+  def start(spark: SparkSession, stateKeys: Long)(body: => StreamingQuery): StreamingQuery =
+    scoped(spark, ShufflePartitions -> shards(spark, stateKeys).toString)(body)
+
+  /** Run `body` — a query's `start()`, which copies the session conf
+    * into the query — with `key` set to `value`, restoring the previous
+    * value afterwards (unset where it was unset), also when `body` throws.
+    */
+  def scoped(spark: SparkSession, setting: (String, String))(
+      body: => StreamingQuery): StreamingQuery = {
+    val (key, value) = setting
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
     try body
-    finally prev.fold(spark.conf.unset(ShufflePartitions))(spark.conf.set(ShufflePartitions, _))
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -173,4 +173,18 @@ class SessionStreamSpec extends SparkSuite {
     } finally q2.stop()
     assert(readSink(outDir) == batchSessions(batch1 ++ batch2))
   }
+
+  test("evt_sessions_stream: one committed micro-batch per fed batch, batch answer") {
+    val dir = "/root/testdata/sf0.001"
+    val streamed = SparkEntry.queries("evt_sessions_stream")(spark, dir).collect().toSeq
+    assert(streamed.nonEmpty)
+    assert(streamed == SparkEntry.queries("evt_sessions")(spark, dir).collect().toSeq)
+    // the entry's filled scratch dir (a filled key is returned as is)
+    val root = graft.fixtures.SessionCache.scratchDir(
+      s"evt_sessions_stream|${spark.sparkContext.applicationId}|$dir")
+    val commits = new java.io.File(s"$root/ck/commits").list().count(!_.startsWith("."))
+    // four event batches plus the two flush sentinels, and no no-data batch
+    val events = graft.fixtures.Fixtures.events(spark, dir).count().toInt
+    assert(commits == graft.streaming.Replay.batches(Seq.fill(events)(()), minRows = 1).size + 2)
+  }
 }
