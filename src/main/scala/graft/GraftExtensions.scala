@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.expr.{CharNgrams, HyperplaneDots, LastBy, TopK, VecDot, VecNormSq, WordNgrams}
+import graft.expr.GraftFunctions
 
 /** Library integration point: install the engine's SQL function surface
   * through the standard extensions hook —
@@ -18,71 +18,16 @@ import graft.expr.{CharNgrams, HyperplaneDots, LastBy, TopK, VecDot, VecNormSq, 
   * (which the query entries call per-session for the driver harness):
   * extension-injected functions exist in EVERY session of the
   * application, including ones the library never sees being created.
-  *
-  * Registered surface (SURVEY §2.C + the vector kernels) — the SAME
-  * name set as the per-session registrar (its idempotence guard checks
-  * every name, so the two surfaces cannot silently diverge again):
-  * `graft_topk`(+`_state`/`_merge`), `graft_last_by`,
-  * `graft_tdigest_quantiles`(+`_state`/`_merge`), `graft_capped_longs`,
-  * `to_start_of_interval`, `char_ngrams`, `word_ngrams`, `vec_normsq`,
-  * `vec_dot`, `hyperplane_dots`, `cdc_chunks`.
+  * Both install the one table [[graft.expr.GraftFunctions.Surface]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
-  private def litInt(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-  private def litBool(e: Expression): Boolean = e.eval().asInstanceOf[Boolean]
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_topk"),
-      info("graft_topk", "graft_topk(col, k) - SpaceSaving top-k (ClickHouse topK)"),
-      exprs => TopK(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_topk_state"),
-      info("graft_topk_state", "graft_topk_state(col, k) - serialized sketch (ClickHouse topKState)"),
-      exprs => graft.expr.TopKState(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_topk_merge"),
-      info("graft_topk_merge", "graft_topk_merge(state, k) - fold persisted states (ClickHouse topKMerge)"),
-      exprs => graft.expr.TopKMerge(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_last_by"),
-      info("graft_last_by", "graft_last_by(value, ord) - value at max ord on the hash-aggregate path"),
-      exprs => LastBy(exprs.head, exprs(1))))
-    // tdigest trio (round-12 review: these were register()-only, so an
-    // extensions-built session lacked them — the full surfaces now match)
-    ext.injectFunction((FunctionIdentifier("graft_tdigest_quantiles"),
-      info("graft_tdigest_quantiles", "graft_tdigest_quantiles(col, pcts) - merging t-digest quantiles"),
-      exprs => graft.expr.TDigestQuantiles(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_tdigest_state"),
-      info("graft_tdigest_state", "graft_tdigest_state(col) - serialized t-digest (quantileTDigestState)"),
-      exprs => graft.expr.TDigestState(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_tdigest_merge"),
-      info("graft_tdigest_merge", "graft_tdigest_merge(state, pcts) - fold persisted digests (quantileTDigestMerge)"),
-      exprs => graft.expr.TDigestMerge(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_capped_longs"),
-      info("graft_capped_longs", "graft_capped_longs(col, cap) - bounded-buffer BIGINT collect"),
-      exprs => graft.expr.CappedLongs(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("to_start_of_interval"),
-      info("to_start_of_interval", "to_start_of_interval(ts, seconds) - ClickHouse toStartOfInterval"),
-      exprs => graft.expr.GraftFunctions.toStartOfInterval(exprs)))
-    ext.injectFunction((FunctionIdentifier("char_ngrams"),
-      info("char_ngrams", "char_ngrams(text, n, dedup) - codegen'd char n-grams"),
-      exprs => CharNgrams(exprs.head, litInt(exprs(1)), litBool(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("word_ngrams"),
-      info("word_ngrams", "word_ngrams(tokens, n, dedup) - codegen'd word n-grams"),
-      exprs => WordNgrams(exprs.head, litInt(exprs(1)), litBool(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("vec_normsq"),
-      info("vec_normsq", "vec_normsq(qv) - exact squared norm of a quantized vector"),
-      exprs => VecNormSq(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - exact integer dot product"),
-      exprs => VecDot(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("hyperplane_dots"),
-      info("hyperplane_dots", "hyperplane_dots(qv, n) - n deterministic hyperplane dots"),
-      exprs => HyperplaneDots(exprs.head, litInt(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("cdc_chunks"),
-      info("cdc_chunks", "cdc_chunks(tokens, mod) - map-side CDC chunk signatures"),
-      exprs => graft.expr.CdcChunks(exprs.head, litInt(exprs(1)))))
+    GraftFunctions.Surface.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo("graft", null, f.name, f.usage, "", "", "", "", "", "", "built-in"),
+        f.build))
+    }
     // whole-operator extension: plans graft.plans.AsOfJoinPlan (the
     // custom AS-OF JOIN logical node) to its merge-based physical exec
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

@@ -50,9 +50,6 @@ object Fixtures {
   private def shortname(n: String): String =
     s"CASE WHEN ($n) % 7 = 0 THEN concat('BOND-', ${secCode(n)}, '-OFZ') ELSE concat('SN-', ${secCode(n)}) END"
 
-  /** Boards offered by the reference (main.go:106). */
-  val Boards = Seq("TQBR", "TQTF", "FUT")
-
   // =========================================================================
   // transaq_trades  (from lineitem; FIXTURES.md)
   // =========================================================================
@@ -97,9 +94,10 @@ object Fixtures {
       // partitioning every cached table hands its consumers — is ONE task
       // regardless of local[32]. That serialized the map-heavy stages of
       // every documents/trades consumer (the BPE replace chain, shingle
-      // explodes, quality projections) at fixture scale; ScaleProbe2
-      // measured llm_bpe_apply running 2x FASTER on 10x the data purely
-      // because the bigger corpus happened to be written as 32 files.
+      // explodes, quality projections) at fixture scale; ScaleProbe's
+      // second decade measured llm_bpe_apply running 2x FASTER on 10x the
+      // data purely because the bigger corpus happened to be written as 32
+      // files.
       //
       // The target is SIZE-PROPORTIONAL, not defaultParallelism flat: a
       // single-JVM interleaved A/B (PERF_NOTES.md, round 15) measured a
@@ -665,8 +663,8 @@ object Fixtures {
     * microseconds per row. At the 64 KB/partition text-table rule the
     * 2 k-row sf0.1 corpus cached as ~30 partitions, and every job of the
     * 15-entry ANN/semdedup family paid ~30 task launches per stage for
-    * ~70 rows each (JobBreakdown: 40+ jobs × 30–63 tasks on the guarded
-    * entry). 512 KB/partition keeps the SAME size-proportional,
+    * ~70 rows each (KeyProbe's job counts: 40+ jobs × 30–63 tasks on the
+    * guarded entry). 512 KB/partition keeps the SAME size-proportional,
     * machine-capped rule (sf1 still fans out to ~20+ partitions; real
     * deployments' multi-file scans never enter the branch) while cutting
     * fixture-scale task-launch overhead ~8×. Text tables keep 64 KB —

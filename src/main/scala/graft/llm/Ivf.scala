@@ -118,7 +118,7 @@ object Ivf {
     * join, one extra N-row shuffle) that the saved dots must repay:
     * flat costs ≈ N·K dots, hier ≈ K·G·3 + N·(G + K/G) dots + overhead,
     * so the dot ratio ≈ K / (G + K/G) ≈ √K/2 only pays once N·K is large
-    * enough to dominate the overhead. IvfHierProbe measured the regime
+    * enough to dominate the overhead. CostProbe measured the regime
     * directly: at N = 70k rows hier runs 0.64–0.89× flat (overhead-bound,
     * break-even), at the probe's second decade it is 7.4–8.6× faster
     * (62–66× fewer dots), and the ratio grows toward ~1000× at the 2^20
@@ -173,7 +173,7 @@ object Ivf {
     *      aggregation.
     *
     * O(N·√K) dots at G = √K instead of O(N·K) — ~70× fewer at the sf1000
-    * shape (K = 2^20 capped, G = 1024), measured by IvfHierProbe.
+    * shape (K = 2^20 capped, G = 1024), measured by CostProbe.
     *
     * APPROXIMATION CONTRACT: above [[HierMinK]] the result is the
     * nearest centroid WITHIN the nearest trained coarse cell (nprobe=1) —

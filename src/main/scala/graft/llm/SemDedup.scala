@@ -85,7 +85,7 @@ object SemDedup {
     * regime where chooseK's 2^20 cap binds (expected cluster size exceeds
     * the target because K can no longer grow with N) without needing a
     * 37-billion-vector corpus: force K below N/target and measure what
-    * the split + capped routes absorb. PostCapProbe commits the table.
+    * the split + capped routes absorb. CostProbe measures it.
     */
   private[graft] def guardedAssignWithK(emb: DataFrame, k: Int,
       targetClusterSize: Int, maxClusterSize: Int): DataFrame = {
@@ -96,7 +96,7 @@ object SemDedup {
     // O(N·√K) dots, exact-equal below Ivf.HierMinK, nprobe=1 approximate
     // above it with the oracle stating the same algorithm — see
     // [[Ivf.assignHier]]; contract pinned in SemDedupSpec, measured
-    // flop/time ratio in IvfHierProbe. localCheckpoint (round 15; was
+    // flop/time ratio in CostProbe. localCheckpoint (round 15; was
     // .cache() in r14) because the guard logic below consumes it from
     // several branches (sizes, flagged, the split path) — N (vec_id,
     // cent_id) rows, ~16 B/row: the cache kept the full two-level

@@ -17,8 +17,9 @@ object IngestQueries {
     * columns, and only without the memo cache can Catalyst prune the
     * unused wire derivations (the HH:mm:ss concat dominates) down to the
     * parquet scan — cold 3.7 s → 1.4 s, warm 1.8 s → 1.4 s at sf0.1
-    * (tools/ColdProbe). The exact-replay entries keep the cached form:
-    * they read every column, so pruning buys nothing there.
+    * (PERF_NOTES.md, *a16_candles_batch cold path*). The exact-replay
+    * entries keep the cached form: they read every column, so pruning
+    * buys nothing there.
     */
   val a16CandlesBatch = QueryDef.sql(
     "a16_candles_batch",
@@ -1003,9 +1004,10 @@ object IngestQueries {
     * `maxFiles` is VOLUME-SIZED (≥2, one target file per ~5M rows) —
     * the knob a deployment turns with day volume. Round 10: the fixed
     * maxFiles = 2 made the compaction rewrite a 2-task external sort
-    * whatever the scale — OptDecompose measured 218 s at sf10 vs 17.6 s
-    * volume-sized (ratio 14.5 → 7.4 per ×10 data); the 13.4 composite
-    * ScaleProbe2 recorded was that ceiling, not the operator's.
+    * whatever the scale — a decomposition measured 218 s at sf10 vs 17.6 s
+    * volume-sized (ratio 14.5 → 7.4 per ×10 data; PERF_NOTES.md, round
+    * 10); the 13.4 composite ScaleProbe's second decade recorded was that
+    * ceiling, not the operator's.
     */
   val layoutOptimizeCompact = QueryDef.sql(
     "layout_optimize_compact",

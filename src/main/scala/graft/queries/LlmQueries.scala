@@ -1152,9 +1152,10 @@ object LlmQueries {
   }
 
   /** PQ shortlist size (ADC candidates per query before exact re-rank).
-    * ~8× over-retrieve for top-3 — PqProbe on the (near-random, worst
-    * case) fixture measures recall@3 0.22/0.39/0.61 at shortlist
-    * 10/25/50 with the trained codebook; 25 is the knee of that curve.
+    * ~8× over-retrieve for top-3 — on the (near-random, worst case)
+    * fixture, recall@3 measured 0.22/0.39/0.61 at shortlist 10/25/50
+    * with the trained codebook (PERF_NOTES.md, *Probe mains folded into
+    * four*); 25 is the knee of that curve.
     */
   private val PqShortlist = 25
 
@@ -1793,11 +1794,12 @@ object LlmQueries {
     // localCheckpoint before the presentation sort (round 15, guide §1.1/
     // §7.2): a global ORDER BY range-partitions, and RangePartitioner's
     // boundary-sampling pass executes the ENTIRE map-side child once
-    // before the real pass runs it again — JobBreakdown measured two
-    // equal ~1.45 s decode jobs per rep (render + javax.sound parse over
-    // every row, twice). Materializing the decoded rows once (tiny typed
-    // rows) makes the sampling pass read blocks instead of re-decoding:
-    // 3.1 → ~1.7 s warm at sf0.1.
+    // before the real pass runs it again — a per-job timing
+    // (OPTIMIZATION_r15.md) measured two equal ~1.45 s decode jobs per
+    // rep (render + javax.sound parse over every row, twice).
+    // Materializing the decoded rows once (tiny typed rows) makes the
+    // sampling pass read blocks instead of re-decoding: 3.1 → ~1.7 s warm
+    // at sf0.1.
     // Round 16: the WAV render (fixture synthesis — production parquet
     // holds real container bytes) splits off into a memoized post-ingest
     // table, the trades/documents discipline; the REAL javax.sound
@@ -5228,10 +5230,10 @@ object LlmQueries {
     * several jobs at once — actions are only sequential because driver
     * code calls them sequentially. Under one action the five retrieval
     * methods' 5-task stages serialized (~3 s wall for ~1.5 s of work at
-    * local[32], JobBreakdown r16); materializing each method from its own
-    * thread lets their stages back-fill each other's idle cores. Sized to
-    * the ledger's method count; daemon threads so the pool never blocks
-    * JVM exit.
+    * local[32], per-job timing in OPTIMIZATION_r16.md); materializing
+    * each method from its own thread lets their stages back-fill each
+    * other's idle cores. Sized to the ledger's method count; daemon
+    * threads so the pool never blocks JVM exit.
     */
   private lazy val ledgerPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
@@ -5382,7 +5384,7 @@ object LlmQueries {
     // Round 16 overlap (guide §2.6): the five methods are INDEPENDENT
     // subtrees over the same cached corpus, each a handful of 5-task
     // stages — built under the single union action they serialized
-    // (JobBreakdown: ~3 s wall for ~1.5 s of summed job time at
+    // (OPTIMIZATION_r16.md: ~3 s wall for ~1.5 s of summed job time at
     // local[32]). Materialize each method from its own thread so their
     // stages back-fill each other's idle cores; every rep still
     // recomputes every approximate method (only the ground truth and the

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.expr.GraftFunctions
 import graft.fixtures.Fixtures._
 
 /** The 22 dashboard queries (SURVEY.md §2.B; GD =
@@ -197,7 +196,6 @@ object TradeQueries {
          |ORDER BY time, sec""".stripMargin,
       tradesCte)
   ) { (spark, dir) =>
-    GraftFunctions.register(spark)
     trades(spark, dir)
       .filter(col("quantity") === 1 && col("buy_sell") === "B" && timeRange(col("time")))
       .groupBy(col("time"), col("sec_code"))
@@ -583,7 +581,6 @@ object TradeQueries {
         |ORDER BY buy_sell, pos""".stripMargin,
       tradesCte)
   ) { (spark, dir) =>
-    GraftFunctions.register(spark)
     val parts = graft.fixtures.SessionCache.scratchDir(
       s"topk_states|${spark.sparkContext.applicationId}|$dir")
     trades(spark, dir)
@@ -813,7 +810,6 @@ object TradeQueries {
     "qx_tdigest_state_merge",
     withCtes(tdigestLedgerSql, tradesCte)
   ) { (spark, dir) =>
-    GraftFunctions.register(spark)
     val t = trades(spark, dir).select(col("board"), col("price"), col("time"))
     val parts = graft.fixtures.SessionCache.scratchDir(
       s"tdigest_states|${spark.sparkContext.applicationId}|$dir")

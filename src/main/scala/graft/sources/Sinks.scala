@@ -49,7 +49,7 @@ object Sinks {
       .withColumn("trade_date", to_date(col("time")))
       // co-partition by (day, sec_code), NOT day alone: with a handful of
       // trading days, a date-only shuffle funnels the whole corpus into
-      // as many tasks as there are days — the second-decade ScaleProbe2
+      // as many tasks as there are days — ScaleProbe's second decade
       // measured the write going 12× at 10× data (single-task 20M-row
       // sorts, spilling). (day, code) gives days × codes groups — full
       // cluster parallelism — while partitionBy still splits directories

@@ -49,6 +49,10 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(r.getLong(4) == 50L)
       assert(r.getInt(5) == 8)
       assert(r.getSeq[String](6).headOption.contains("a"))
+      // every name of the registrar table resolves, also the ones the
+      // query above does not call
+      graft.expr.GraftFunctions.Surface.foreach(f =>
+        assert(spark.catalog.functionExists(f.name), s"${f.name} is not installed"))
       // the planner strategy came through the SAME extensions hook: the
       // custom as-of logical node must plan (and run) in this session
       // without AsOf.join's runtime extraStrategies fallback

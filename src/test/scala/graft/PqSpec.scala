@@ -51,7 +51,7 @@ class PqSpec extends SparkSuite {
   test("recall@3 grows with the shortlist and clears 0.5 at width 50") {
     // 2-byte codes vs 256-byte vectors on a near-random corpus — the
     // worst case for any quantizer; chance is ≈3/|corpus| ≈ 0.7%.
-    // PqProbe measured 0.22 / 0.39 / 0.61 at widths 10/25/50.
+    // Measured 0.22 / 0.39 / 0.61 at widths 10/25/50 (PERF_NOTES.md).
     val r = Seq(10, 25, 50).map(w => w -> recallAt3(cb, w))
     info(r.map { case (w, x) => f"recall@3[$w] = $x%.3f" }.mkString(", "))
     assert(r.sliding(2).forall { case Seq((_, a), (_, b)) => b >= a },

@@ -2,36 +2,37 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Measures the adaptive-width recall claim empirically (round 7): the
-  * embed-near-dup fixture plants exactly 50 cos≈0.99 twin pairs
-  * (vec_id < 50 ↔ vec_id + 100000, replica 0 only in the scaled corpus),
-  * so planted-pair recall is directly countable at both scales:
-  * sf0.1 → 8-bit signatures (the historical width), /tmp/graft_sf1 →
-  * 11 bits (corpus-adaptive). The Scaladoc predicts ≈0.99 recall at 8
-  * bits and ≈0.97 at 11; this prints the measured values.
+import graft.SparkEntry
+import graft.fixtures.Fixtures
+
+/** Planted-pair recall of `llm_embed_neardup`'s corpus-adaptive signature
+  * width, at a fixture and at its 10× replica (made by
+  * [[ScaleProbe.materialize]], so the width grows with the corpus). The
+  * near-dup fixture plants 50 cos≈0.99 twins (vec_id < 50 ↔ vec_id +
+  * 100000, in replica 0 only), so recall is directly countable at both
+  * sizes. PERF_NOTES.md (*Second wave* of the 10× scale probe) records
+  * 50/50 at 8 bits (sf0.1) and 50/50 at 11 bits (its 10× replica).
   *
-  * Run with `sbt "Test/runMain graft.tools.RecallProbe"` (after
-  * ScaleProbe has materialized /tmp/graft_sf1).
+  * {{{
+  * SPARK_GRAFT_SF_DIR=<fixture dir> sbt "Test/runMain graft.tools.RecallProbe"
+  * }}}
   */
 object RecallProbe {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for (dir <- Seq(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-        "/tmp/graft_sf1")) {
-      graft.fixtures.Fixtures.clearDerivedCache(spark)
-      val out = graft.SparkEntry.queries("llm_embed_neardup")(spark, dir)
-      val planted = out
-        .where("vec_a < 50 AND vec_b = vec_a + 100000").count()
-      val total = out.count()
-      println(f"[recall] $dir: planted $planted/50 (${planted / 50.0}%.2f), total pairs $total")
+  val Planted = 50
+
+  def main(args: Array[String]): Unit =
+    ProbeMain((spark, dir) => run(spark, dir, ScaleProbe.DefaultOut))
+
+  /** One line per size: planted pairs found, their recall and all pairs. */
+  def run(spark: SparkSession, base: String, out: String): Seq[String] = {
+    val scaled = ScaleProbe.materialize(spark, base, ScaleProbe.scaledDir(out, 10), 10,
+      Seq("embeddings"))
+    for (dir <- Seq(base, scaled)) yield {
+      Fixtures.clearDerivedCache(spark)
+      val pairs = SparkEntry.queries("llm_embed_neardup")(spark, dir)
+      val planted = pairs.where("vec_a < 50 AND vec_b = vec_a + 100000").count()
+      f"[recall] dir=$dir planted=$planted recall=${planted.toDouble / Planted}%.2f " +
+        s"pairs=${pairs.count()}"
     }
-    spark.stop()
   }
 }
