@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{ChQueries, E2eQueries, EventQueries, IngestQueries, LlmQueries, QueryDef, TradeQueries}
+import graft.queries.{ChQueries, DedupQueries, E2eQueries, EventQueries, IngestQueries, LmQueries,
+  MultimodalQueries, QualityQueries, QueryDef, RetrievalQueries, TradeQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
   /** Every implemented operator, assembled from the query modules. */
   def allDefs: Seq[QueryDef] =
-    TradeQueries.all ++ IngestQueries.all ++ LlmQueries.all ++ EventQueries.all ++
+    TradeQueries.all ++ IngestQueries.all ++ DedupQueries.all ++ RetrievalQueries.all ++
+      LmQueries.all ++ QualityQueries.all ++ MultimodalQueries.all ++ EventQueries.all ++
       ChQueries.all ++ E2eQueries.all
 
   /** Flagship query (Q7, SURVEY §7.4) on /root/testdata/sf0.001;

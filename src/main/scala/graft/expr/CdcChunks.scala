@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * chunk rows.
   *
   * Semantics — bit-identical to the DuckDB oracle spelling
-  * (`queries/LlmQueries.cdcChunk`):
+  * (`queries/DedupQueries.cdcChunk`):
   *   - positions are 1-based over the token array;
   *   - a word w is a BOUNDARY iff `int(hex8(md5(w))) % mod == 0`
   *     (first 8 hex chars of the md5 of its UTF-8 bytes); a boundary

@@ -39,9 +39,9 @@ object DocStream {
     val scored = docs
       .withColumn("text_hash", md5(col("text")))
       .withColumn("tk", split(col("text"), " "))
-    val cols = scored.columns.map(col).toSeq ++ graft.queries.LlmQueries.qualityMetricCols
+    val cols = scored.columns.map(col).toSeq ++ graft.queries.QualityQueries.qualityMetricCols
     scored.select(cols: _*)
-      .withColumn("quality", expr(graft.queries.LlmQueries.qualityExpr))
+      .withColumn("quality", expr(graft.queries.QualityQueries.qualityExpr))
       .withColumn("keep", col("quality") >= 0.6)
       .drop("tk", "n_tokens", "n_uniq", "stop_cnt", "n_chars")
       .withWatermark(tsCol, delay)

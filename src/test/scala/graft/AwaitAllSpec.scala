@@ -7,7 +7,7 @@ import scala.concurrent.{ExecutionContext, Future}
 import org.scalatest.concurrent.Eventually
 import org.scalatest.time.{Seconds, Span}
 
-import graft.queries.LlmQueries
+import graft.queries.RetrievalQueries
 
 /** The ANN ledger's fan-out: a failing method future must not leave the
   * other methods' Spark jobs running behind the entry.
@@ -23,7 +23,7 @@ class AwaitAllSpec extends SparkSuite with Eventually {
     val failing = Future[Long](throw new IllegalStateException("injected"))
     val slow = Future(spark.sparkContext.parallelize(1 to 2, 2)
       .map { i => Thread.sleep(2000); i }.count())
-    val e = intercept[IllegalStateException](LlmQueries.awaitAll(Seq(failing, slow)))
+    val e = intercept[IllegalStateException](RetrievalQueries.awaitAll(Seq(failing, slow)))
     assert(e.getMessage == "injected")
     assert(slow.isCompleted)
     // the status store hears of the job's end over the async listener
@@ -35,6 +35,6 @@ class AwaitAllSpec extends SparkSuite with Eventually {
 
   test("awaitAll returns the values in the order of the futures") {
     val fs = Seq(3, 1, 2).map(i => Future { Thread.sleep(50L * i); i })
-    assert(LlmQueries.awaitAll(fs) == Seq(3, 1, 2))
+    assert(RetrievalQueries.awaitAll(fs) == Seq(3, 1, 2))
   }
 }

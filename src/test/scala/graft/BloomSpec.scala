@@ -1,8 +1,8 @@
 package graft
 
-import graft.queries.LlmQueries
+import graft.queries.DedupQueries
 
-/** Bloom pre-filter semantics ([[LlmQueries.bloomDedupLedger]]) on a
+/** Bloom pre-filter semantics ([[DedupQueries.bloomDedupLedger]]) on a
   * planted corpus: structural no-false-negative (an exact duplicate's k
   * positions are the corpus doc's own positions, so membership always
   * hits), ledger totality over the batch, and the false_pos column's
@@ -26,7 +26,7 @@ class BloomSpec extends SparkSuite {
       (10L, "a wholly novel sentence that matches nothing"),
       (15L, "another fresh unseen string of words entirely"))
       .toDF("doc_id", "text")
-    LlmQueries.bloomDedupLedger(docs)
+    DedupQueries.bloomDedupLedger(docs)
       .collect()
       .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2), r.getBoolean(3))))
       .toMap

@@ -1,8 +1,8 @@
 package graft
 
-import graft.queries.LlmQueries
+import graft.queries.DedupQueries
 
-/** Content-defined chunking semantics ([[LlmQueries.cdcChunkLedger]]) on
+/** Content-defined chunking semantics ([[DedupQueries.cdcChunkLedger]]) on
   * a planted corpus. The test derives boundary words with the SAME hash
   * rule the operator uses (first 8 md5 hex chars as an int, % 8 == 0),
   * so the chunk structure of each fixture doc is known exactly — which
@@ -40,7 +40,7 @@ class CdcSpec extends SparkSuite {
       (3L, Seq(p(10), p(11), b(2), p(10), p(11), b(2)).mkString(" ")))
       .toDF("doc_id", "text")
     graft.expr.GraftFunctions.register(spark) // cdc_chunks
-    LlmQueries.cdcChunkLedger(docs)
+    DedupQueries.cdcChunkLedger(docs)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
   }

@@ -1,9 +1,9 @@
 package graft
 
-import graft.queries.LlmQueries
+import graft.queries.DedupQueries
 
 /** Maximal duplicated-range merge semantics
-  * ([[LlmQueries.dupSpanMergeRanges]]) on a planted corpus: the keeper
+  * ([[DedupQueries.dupSpanMergeRanges]]) on a planted corpus: the keeper
   * occurrence never enters an island, separated duplicate regions stay
   * separate islands, touching covers coalesce, and the island carries the
   * count of spans it merged.
@@ -30,7 +30,7 @@ class DupSpanMergeSpec extends SparkSuite {
       // doc 3: unique words only — no islands
       (3L, (0 until 12).map(i => s"d$i").mkString(" ")))
       .toDF("doc_id", "text")
-    LlmQueries.dupSpanMergeRanges(docs)
+    DedupQueries.dupSpanMergeRanges(docs)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toList
@@ -65,9 +65,9 @@ class DupSpanMergeSpec extends SparkSuite {
     // island's span count can't exceed what its token width can hold.
     graft.expr.GraftFunctions.register(spark)
     val docs = graft.fixtures.Fixtures.documents(spark, "/root/testdata/sf0.001")
-    val merged = LlmQueries.dupSpanMergeRanges(docs).collect()
+    val merged = DedupQueries.dupSpanMergeRanges(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    val droppedPerDoc = LlmQueries.spanDedupLedger(docs).collect()
+    val droppedPerDoc = DedupQueries.spanDedupLedger(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     val mergedPerDoc = merged.groupBy(_._1).view.mapValues(_.map(_._5).sum).toMap
     assert(mergedPerDoc == droppedPerDoc.filter(_._2 > 0),

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ingest.Dedup
-import graft.queries.LlmQueries
+import graft.queries.DedupQueries
 
 /** Loud-failure guards added in round 5 (advisor items): misuse of the
   * fixed-width packing, ragged quantized vectors, and the CC iteration
@@ -73,7 +73,7 @@ class GuardsSpec extends SparkSuite {
     // per-round propagation would trip the require; doubling must not
     val nodes = (0L until 30L).toDF("node")
     val pairs = (0L until 29L).map(i => (i, i + 1)).toDF("src", "dst")
-    val labels = LlmQueries.minLabelComponents(nodes, pairs)
+    val labels = DedupQueries.minLabelComponents(nodes, pairs)
       .orderBy("node").collect()
     assert(labels.length == 30)
     assert(labels.forall(_.getLong(1) == 0L), "all chain nodes label to min id 0")
@@ -82,7 +82,7 @@ class GuardsSpec extends SparkSuite {
   test("two components + an isolate get distinct minimal labels") {
     val nodes = Seq(0L, 1L, 2L, 10L, 11L, 99L).toDF("node")
     val pairs = Seq((0L, 1L), (1L, 2L), (10L, 11L)).toDF("src", "dst")
-    val got = LlmQueries.minLabelComponents(nodes, pairs)
+    val got = DedupQueries.minLabelComponents(nodes, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 10L -> 10L, 11L -> 10L, 99L -> 99L))
   }

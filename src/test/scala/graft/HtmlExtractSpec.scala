@@ -1,8 +1,8 @@
 package graft
 
-import graft.queries.LlmQueries
+import graft.queries.MultimodalQueries
 
-/** The HTML extraction chain ([[LlmQueries.htmlExtractText]]) over
+/** The HTML extraction chain ([[MultimodalQueries.htmlExtractText]]) over
   * hand-written pages — NOT the registered entry's derived markup — so
   * the operator's behavior is pinned independently of the fixture seam:
   * head/nav/footer blocks vanish wholesale (scripts included), remaining
@@ -13,7 +13,7 @@ class HtmlExtractSpec extends SparkSuite {
 
   private def extract(html: String): String = {
     import spark.implicits._
-    LlmQueries.htmlExtractText(Seq((1L, html)).toDF("doc_id", "html"))
+    MultimodalQueries.htmlExtractText(Seq((1L, html)).toDF("doc_id", "html"))
       .select("extracted").head().getString(0)
   }
 

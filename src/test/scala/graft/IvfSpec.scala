@@ -87,8 +87,7 @@ class IvfSpec extends SparkSuite {
     // still catch most twins (a miss = base and twin split across a
     // centroid boundary — the documented coarse-clustering trade)
     graft.expr.GraftFunctions.register(spark)
-    val out = graft.queries.LlmQueries.all.find(_.name == "llm_semdedup").get
-      .fn(spark, dir)
+    val out = SparkEntry.queries("llm_semdedup")(spark, dir)
     val dropped = out.filter(col("dropped")).select("vec_id", "dup_of")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(dropped.forall(_._1 >= 100000L),

@@ -1,8 +1,8 @@
 package graft
 
-import graft.queries.LlmQueries
+import graft.queries.LmQueries
 
-/** Supervised token classifier ([[LlmQueries.langClassifyLedger]]):
+/** Supervised token classifier ([[LmQueries.langClassifyLedger]]):
   * learns when the corpus has signal. The DRIVER-gated entry runs over
   * the synthetic fixture whose `lang` label is deliberately uncorrelated
   * with tokens (measured lift ≈ 1 for every frequent token) — there the
@@ -24,7 +24,7 @@ class LangClassifySpec extends SparkSuite {
       val shared = (0 until 6).map(k => s"fill${(i + k) % 7}").mkString(" ")
       (i.toLong, lang, s"$excl $shared")
     } :+ ((75L, "aa", "unseen1 unseen2 unseen3")) // holdout doc, no trained tokens
-    LlmQueries.langClassifyLedger(docs.toDF("doc_id", "lang", "text")).cache()
+    LmQueries.langClassifyLedger(docs.toDF("doc_id", "lang", "text")).cache()
   }
 
   test("holdout accuracy is perfect when classes own exclusive vocabulary") {

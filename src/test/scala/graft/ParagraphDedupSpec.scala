@@ -1,9 +1,9 @@
 package graft
 
-import graft.queries.LlmQueries
+import graft.queries.DedupQueries
 
 /** Paragraph-level exact dedup semantics
-  * ([[LlmQueries.paragraphDedupLedger]], 20-token disjoint blocks) on a
+  * ([[DedupQueries.paragraphDedupLedger]], 20-token disjoint blocks) on a
   * planted corpus: a boilerplate block recurring across docs keeps only
   * its corpus-wide first occurrence (min doc_id, then min block index),
   * unique blocks always keep, short docs form one short block, and the
@@ -38,7 +38,7 @@ class ParagraphDedupSpec extends SparkSuite {
       // boundary-sensitive by design (span_dedup covers shifted text)
       (4L, s"${filler("d", 10)} $B ${filler("e", 10)}"))
       .toDF("doc_id", "text")
-    LlmQueries.paragraphDedupLedger(docs)
+    DedupQueries.paragraphDedupLedger(docs)
       .collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))))

@@ -8,10 +8,10 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, HashJoin}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.queries.LlmQueries
+import graft.queries.RetrievalQueries
 
 /** The recall entries join their top-10 hits on one packed BIGINT key
-  * ([[LlmQueries.hitKey]]). A broadcast build on one integral key is a
+  * ([[RetrievalQueries.hitKey]]). A broadcast build on one integral key is a
   * `LongHashedRelation`; a STRING or two-column key builds an
   * `UnsafeHashedRelation`, whose map takes a whole memory page however
   * few rows it holds, and a held result's plan keeps that page alive.
@@ -55,13 +55,13 @@ class RecallKeySpec extends SparkSuite {
 
   test("the packed hit key is injective on the fixture's candidate pairs") {
     val ids = graft.fixtures.Fixtures.embeddingsNearDup(spark, dir).select("vec_id").distinct()
-    val pairs = ids.crossJoin(ids.filter(col("vec_id") < LlmQueries.NumQueries)
+    val pairs = ids.crossJoin(ids.filter(col("vec_id") < RetrievalQueries.NumQueries)
         .select(col("vec_id").as("query_id")))
-      .select(col("query_id"), col("vec_id"), LlmQueries.hitKey.as("hit_key"))
+      .select(col("query_id"), col("vec_id"), RetrievalQueries.hitKey.as("hit_key"))
       .cache()
     try {
       val n = pairs.count()
-      assert(n == ids.count() * LlmQueries.NumQueries)
+      assert(n == ids.count() * RetrievalQueries.NumQueries)
       assert(pairs.select("query_id", "vec_id").distinct().count() == n)
       assert(pairs.select("hit_key").distinct().count() == n)
     } finally pairs.unpersist()

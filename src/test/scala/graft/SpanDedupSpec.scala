@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.LlmQueries
+import graft.queries.DedupQueries
 
-/** Span-level exact dedup semantics ([[LlmQueries.spanDedupLedger]]) on a
+/** Span-level exact dedup semantics ([[DedupQueries.spanDedupLedger]]) on a
   * planted corpus: first global occurrence keeps, later occurrences drop,
   * within-doc repeats drop, short docs produce zero spans, and the ledger
   * is total (one row per doc).
@@ -35,7 +35,7 @@ class SpanDedupSpec extends SparkSuite {
       // doc 4: unique words only — spans, zero drops
       doc(4L, (0 until 12).map(i => s"d$i").mkString(" ")))
       .toDF("doc_id", "text")
-    LlmQueries.spanDedupLedger(docs)
+    DedupQueries.spanDedupLedger(docs)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
   }

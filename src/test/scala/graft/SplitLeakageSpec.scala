@@ -1,6 +1,6 @@
 package graft
 
-/** Split-leakage audit consistency ([[graft.queries.LlmQueries.splitLeakage]]):
+/** Split-leakage audit consistency ([[graft.queries.DedupQueries.splitLeakage]]):
   * the audit composes the cluster machinery and the split rule their own
   * entries gate, so its rows must agree with both on the real fixture —
   * cluster inventory with `llm_dedup_clusters`, membership arithmetic with
