@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   *      broadcast) joined to the code stream on (sub, code) and summed
   *      by (query, vector): approximate distance without touching any
   *      raw vector;
-  *   5. shortlist + re-rank — top-[[graft.queries.RetrievalQueries]] shortlist
-  *      by exact-integer ADC distance, then exact cosine over raw
+  *   5. shortlist + re-rank — a top-`PqShortlist` shortlist (set in
+  *      [[graft.queries.RetrievalQueries]]) by exact-integer ADC distance, then exact cosine over raw
   *      vectors on that bounded set only.
   *
   * Scale shape: no all-pairs anywhere; the codebook and distance tables

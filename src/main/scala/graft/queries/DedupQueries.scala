@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,7 @@ import graft.llm.{Embed, Text}
   * pair stream. Each entry's DuckDB twin sits next to its builder.
   */
 object DedupQueries {
-  import QualityQueries.{qualityExpr, qualityMetricCols, qualityMetricsSql, splitBucketSql, SplitCaseSql}
+  import QualityQueries.{qualCteSql, qualityOf, splitBucketSql, SplitCaseSql}
 
   /** Exact dedup: md5 content hash → canonical = min doc_id per hash.
     * Hash-groupBy + hash-join back; no window/sort (the 100 TB shape).
@@ -67,7 +68,20 @@ object DedupQueries {
     * sizes are computed and oversized buckets dropped ([[LshBucketCap]])
     * exactly as the Spark side does.
     */
-  private val minhashPairsCtes: String = {
+  private def minhashPairsCtes: String =
+    s"""$minhashBandsCtesSql,
+       |bsz AS (SELECT band, bkey, count(*) AS c FROM bands GROUP BY band, bkey),
+       |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+       |         FROM bands x JOIN bands y
+       |           ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
+       |         JOIN bsz ON bsz.band = x.band AND bsz.bkey = x.bkey
+       |         WHERE bsz.c <= $LshBucketCap),
+       |pairs AS (${verifiedJaccardSql("doc_a", "doc_b")})""".stripMargin
+
+  /** DuckDB twin of [[minhashSigs]]: CTEs `toks` … `bands(doc_id, band,
+    * bkey)`, with each doc's shingle set in `sh`.
+    */
+  private def minhashBandsCtesSql: String = {
     val bandsSql = (0 until NumBands)
       .map(b => s"SELECT doc_id, $b AS band, md5(concat(mh${2 * b}, mh${2 * b + 1})) AS bkey FROM mh")
       .mkString("\nUNION ALL\n")
@@ -76,32 +90,42 @@ object DedupQueries {
        |shx AS (SELECT doc_id, unnest(shset) AS sh FROM sh),
        |mh AS (SELECT doc_id, ${Text.minhashAggsSql(NumHashes).mkString(",\n  ")}
        |       FROM shx GROUP BY doc_id),
-       |bands AS ($bandsSql),
-       |bsz AS (SELECT band, bkey, count(*) AS c FROM bands GROUP BY band, bkey),
-       |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       |         FROM bands x JOIN bands y
-       |           ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-       |         JOIN bsz ON bsz.band = x.band AND bsz.bkey = x.bkey
-       |         WHERE bsz.c <= $LshBucketCap),
-       |pairs AS (SELECT doc_a, doc_b, jaccard FROM (
-       |  SELECT doc_a, doc_b,
-       |    CAST(len(list_intersect(a.shset, b.shset)) AS DOUBLE)
-       |      / len(list_distinct(list_concat(a.shset, b.shset))) AS jaccard
-       |  FROM cand JOIN sh a ON a.doc_id = cand.doc_a
-       |            JOIN sh b ON b.doc_id = cand.doc_b) v
-       |WHERE jaccard >= $JaccardThreshold)""".stripMargin
+       |bands AS ($bandsSql)""".stripMargin
   }
 
-  /** Spark side of the verified near-dup pair stream (no output order) —
-    * shared by [[minhashLsh]] and, through [[minhashPairsMaterialized]],
-    * the three connected-component consumers. Returns the pair frame PLUS
-    * a release handle for the two internal caches (the minhash signature
-    * table and the int shingle-set table) so a consumer that materializes
-    * the pairs elsewhere can free them instead of holding their blocks
-    * for the rest of the session.
+  /** DuckDB twin of [[verifiedJaccard]] over CTE `cand(a, b)` and the
+    * shingle sets `sh`.
     */
-  private def minhashPairsBuild(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame, () => Unit) = {
+  private def verifiedJaccardSql(a: String, b: String): String =
+    s"""SELECT $a, $b, jaccard FROM (
+       |  SELECT $a, $b,
+       |    CAST(len(list_intersect(a.shset, b.shset)) AS DOUBLE)
+       |      / len(list_distinct(list_concat(a.shset, b.shset))) AS jaccard
+       |  FROM cand JOIN sh a ON a.doc_id = cand.$a
+       |            JOIN sh b ON b.doc_id = cand.$b) v
+       |WHERE jaccard >= $JaccardThreshold""".stripMargin
+
+  /** MinHash signatures of the documents' word-bigram shingle sets, as
+    * (bands, isets, release):
+    *   - `bands` (doc_id, band, bkey): [[NumBands]] band keys per doc, over
+    *     the cached signature table `mh`;
+    *   - `isets` (doc_id, iset, sz): each doc's shingles as 60-bit md5
+    *     prefix ids, cached — the [[verifiedJaccard]] input;
+    *   - `release` unpersists both caches.
+    * Spark keys a cache by plan, so every entry that builds these frames
+    * ([[minhashLsh]], [[incrementalNearDup]], the first build of the pair
+    * parquet) shares one copy of each: the first `.cache()` fills it and a
+    * later one only logs "Asked to cache already cached data". Only
+    * [[minhashPairsMaterialized]] calls `release`; otherwise the copies
+    * live until [[graft.fixtures.Fixtures.clearDerivedCache]] drops every
+    * cached plan.
+    */
+  private def minhashSigs(spark: SparkSession, dir: String): (DataFrame, DataFrame, () => Unit) = {
+    // shx feeds three consumers (dictionary, signatures, verify sets) but
+    // is NOT cached: the two CACHED artifacts (`mh`, `isets`) sit just
+    // downstream, so each derivation runs once per cache fill and warm
+    // runs never recompute it — caching the occurrence stream itself
+    // would hold corpus×shingles rows for no steady-state gain.
     val shx = documents(spark, dir)
       .withColumn("tk", split(col("text"), " "))
       .select(col("doc_id"), explode(expr(Text.bigramsExpr)).as("sh"))
@@ -122,23 +146,6 @@ object DedupQueries {
       md5(concat(col(s"mh${2 * b}"), col(s"mh${2 * b + 1}"))).as("bkey")))
     val bands = mh.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    // bucket aggregation instead of a band SELF-JOIN (round 7): collect
-    // each bucket's members under the [[LshBucketCap]] hard buffer
-    // (over-cap buckets evaluate NULL and the paired count discards them
-    // — the graft_capped_longs contract) and emit candidate pairs
-    // MAP-SIDE from each sorted member list, the same fused shape as
-    // [[ngramJaccard]]'s posting lists. Kills both scale hazards the 10×
-    // probe measured: the self-join's quadratic growth on oversized
-    // buckets, and a second shuffle of the full band table.
-    val cand = bands.groupBy(col("band"), col("bkey"))
-      .agg(expr(s"graft_capped_longs(doc_id, ${LshBucketCap + 1})").as("raw"),
-        count(lit(1)).as("c"))
-      .filter(col("c") <= LshBucketCap)
-      .select(sort_array(col("raw")).as("docs"))
-      .select(explode(expr(
-        "flatten(transform(docs, (x, i) -> transform(slice(docs, i + 2, size(docs)), y -> named_struct('a', x, 'b', y))))"
-      )).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b")).distinct()
     // verify on INTEGER shingle-id sets (60-bit md5 prefix): int-array
     // intersects are far cheaper than string sets, and the arrays shuffled
     // to the candidate join are 4× smaller; |A∪B| = |A|+|B|-|A∩B|
@@ -147,23 +154,70 @@ object DedupQueries {
       .groupBy("doc_id")
       .agg(collect_list(col("shid")).as("iset"), count(lit(1)).as("sz"))
       .cache()
-    val pairs = cand
-      .join(isets.select(col("doc_id").as("doc_a"), col("iset").as("sa"),
-        col("sz").as("za")), "doc_a")
-      .join(isets.select(col("doc_id").as("doc_b"), col("iset").as("sb"),
-        col("sz").as("zb")), "doc_b")
+    (bands, isets, () => { mh.unpersist(); isets.unpersist(); () })
+  }
+
+  /** Candidate pairs `cand` (a, b) verified by exact Jaccard over `isets`:
+    * (a, b, jaccard) with jaccard ≥ [[JaccardThreshold]].
+    */
+  private def verifiedJaccard(cand: DataFrame, isets: DataFrame, a: String, b: String): DataFrame =
+    cand
+      .join(isets.select(col("doc_id").as(a), col("iset").as("sa"), col("sz").as("za")), a)
+      .join(isets.select(col("doc_id").as(b), col("iset").as("sb"), col("sz").as("zb")), b)
       .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
       .withColumn("jaccard", expr("CAST(i AS DOUBLE) / (za + zb - i)"))
       .filter(col("jaccard") >= JaccardThreshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    (pairs, () => { mh.unpersist(); isets.unpersist(); () })
+      .select(col(a), col(b), col("jaccard"))
+
+  /** Spark side of the verified near-dup pair stream (no output order) —
+    * shared by [[minhashLsh]] and, through [[minhashPairsMaterialized]],
+    * the three connected-component consumers. Returns the pair frame PLUS
+    * a release handle for the two internal caches (the minhash signature
+    * table and the int shingle-set table) so a consumer that materializes
+    * the pairs elsewhere can free them instead of holding their blocks
+    * for the rest of the session.
+    */
+  private def minhashPairsBuild(spark: SparkSession, dir: String): (DataFrame, () => Unit) = {
+    val (bands, isets, release) = minhashSigs(spark, dir)
+    // bucket aggregation instead of a band SELF-JOIN (round 7): collect
+    // each bucket's members under the [[LshBucketCap]] hard buffer
+    // (over-cap buckets evaluate NULL and the paired count discards them
+    // — the graft_capped_longs contract) and emit candidate pairs
+    // MAP-SIDE from each sorted member list, the same fused shape as
+    // [[ngramJaccard]]'s posting lists. Kills both scale hazards the 10×
+    // probe measured: the self-join's quadratic growth on oversized
+    // buckets, and a second shuffle of the full band table.
+    val cand = sortedPairs(cappedBuckets(bands, LshBucketCap, "band", "bkey"))
+    (verifiedJaccard(cand, isets, "doc_a", "doc_b"), release)
   }
+
+  /** The buckets of `keyed` (doc_id plus the `by` columns) that hold at
+    * most `cap` docs, as (by…, raw, c): members are collected under a hard
+    * `cap + 1` buffer (graft_capped_longs), so an over-cap bucket costs
+    * `cap + 1` slots and the count drops it.
+    */
+  private def cappedBuckets(keyed: DataFrame, cap: Int, by: String*): DataFrame =
+    keyed.groupBy(by.map(col): _*)
+      .agg(expr(s"graft_capped_longs(doc_id, ${cap + 1})").as("raw"),
+        count(lit(1)).as("c"))
+      .filter(col("c") <= cap)
+
+  /** Every ordered pair (x before y) of a sorted array column `docs`, as
+    * structs (a, b) — generated map-side, no self-join.
+    */
+  private val PairsOfSorted =
+    "flatten(transform(docs, (x, i) -> transform(slice(docs, i + 2, size(docs)), y -> named_struct('a', x, 'b', y))))"
+
+  /** The distinct candidate pairs (doc_a < doc_b) of [[cappedBuckets]]. */
+  private def sortedPairs(buckets: DataFrame): DataFrame =
+    buckets.select(sort_array(col("raw")).as("docs"))
+      .select(explode(expr(PairsOfSorted)).as("p"))
+      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b")).distinct()
 
   /** [[minhashPairsBuild]] without the release handle — the shape the
     * direct pair entry ([[minhashLsh]]) consumes.
     */
-  private def minhashPairs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
+  private def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     minhashPairsBuild(spark, dir)._1
 
   /** The verified pair stream MATERIALIZED once per (application, input
@@ -177,8 +231,7 @@ object DedupQueries {
     * |pairs| parquet rows. The build's internal caches are released right
     * after the write, so nothing stays resident across bench keys.
     */
-  private def minhashPairsMaterialized(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def minhashPairsMaterialized(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.fixtures.SessionCache.scratch(
       s"llm_pairs|${spark.sparkContext.applicationId}|$dir") { out =>
       val (pairs, release) = minhashPairsBuild(spark, dir)
@@ -232,86 +285,33 @@ object DedupQueries {
     * index, and only MATCHING buckets' member lists explode.
     */
   val incrementalNearDup = QueryDef.sql(
-    "llm_incremental_neardup", {
-      val bandsSql = (0 until NumBands)
-        .map(b => s"SELECT doc_id, $b AS band, md5(concat(mh${2 * b}, mh${2 * b + 1})) AS bkey FROM mh")
-        .mkString("\nUNION ALL\n")
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-         |sh AS (SELECT doc_id, ${Text.bigramsSql} AS shset FROM toks),
-         |shx AS (SELECT doc_id, unnest(shset) AS sh FROM sh),
-         |mh AS (SELECT doc_id, ${Text.minhashAggsSql(NumHashes).mkString(",\n  ")}
-         |       FROM shx GROUP BY doc_id),
-         |bands AS ($bandsSql),
-         |bsz AS (SELECT band, bkey, count(*) AS c FROM bands
-         |        WHERE doc_id % $IncrementalMod <> 0 GROUP BY band, bkey),
-         |cand AS (SELECT DISTINCT n.doc_id AS new_doc, s.doc_id AS dup_of
-         |         FROM bands n JOIN bands s
-         |           ON n.band = s.band AND n.bkey = s.bkey
-         |         JOIN bsz ON bsz.band = s.band AND bsz.bkey = s.bkey
-         |           AND bsz.c <= $LshBucketCap
-         |         WHERE n.doc_id % $IncrementalMod = 0
-         |           AND s.doc_id % $IncrementalMod <> 0)
-         |SELECT new_doc, dup_of, jaccard FROM (
-         |  SELECT new_doc, dup_of,
-         |    CAST(len(list_intersect(a.shset, b.shset)) AS DOUBLE)
-         |      / len(list_distinct(list_concat(a.shset, b.shset))) AS jaccard
-         |  FROM cand JOIN sh a ON a.doc_id = cand.new_doc
-         |            JOIN sh b ON b.doc_id = cand.dup_of) v
-         |WHERE jaccard >= $JaccardThreshold
-         |ORDER BY new_doc, dup_of""".stripMargin
-    }
+    "llm_incremental_neardup",
+    s"""WITH $minhashBandsCtesSql,
+       |bsz AS (SELECT band, bkey, count(*) AS c FROM bands
+       |        WHERE doc_id % $IncrementalMod <> 0 GROUP BY band, bkey),
+       |cand AS (SELECT DISTINCT n.doc_id AS new_doc, s.doc_id AS dup_of
+       |         FROM bands n JOIN bands s
+       |           ON n.band = s.band AND n.bkey = s.bkey
+       |         JOIN bsz ON bsz.band = s.band AND bsz.bkey = s.bkey
+       |           AND bsz.c <= $LshBucketCap
+       |         WHERE n.doc_id % $IncrementalMod = 0
+       |           AND s.doc_id % $IncrementalMod <> 0)
+       |${verifiedJaccardSql("new_doc", "dup_of")}
+       |ORDER BY new_doc, dup_of""".stripMargin
   ) { (spark, dir) =>
     val isBatch = pmod(col("doc_id"), lit(IncrementalMod)) === 0
-    // shx feeds three consumers (dictionary, signatures, verify sets) but
-    // is NOT cached: the two CACHED artifacts (`mh`, `isets`) sit just
-    // downstream, so each derivation runs once per cache fill and warm
-    // runs never recompute it — caching the occurrence stream itself
-    // would hold corpus×shingles rows for no steady-state gain (the same
-    // trade [[minhashLsh]] makes).
-    val shx = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(Text.bigramsExpr)).as("sh"))
-    val shDim = shx.select(col("sh")).distinct()
-      .select(col("sh") +: (0 until NumHashes)
-        .map(i => md5(concat(lit(s"$i|"), col("sh"))).as(s"h$i")): _*)
-    val mh = shx.join(broadcast(shDim), "sh").groupBy("doc_id")
-      .agg(min(col("h0")).as("mh0"),
-        (1 until NumHashes).map(i => min(col(s"h$i")).as(s"mh$i")): _*)
-      .cache()
-    val bandCols = (0 until NumBands).map(b => struct(lit(b).as("band"),
-      md5(concat(col(s"mh${2 * b}"), col(s"mh${2 * b + 1}"))).as("bkey")))
-    val bands = mh.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
+    val (bands, isets, _) = minhashSigs(spark, dir)
     // the frozen index: per-(band, bkey) CAPPED member lists — one hash
     // aggregate over the seen side, over-cap (degenerate) buckets cut
     // exactly as the symmetric entry cuts them. The new batch's bands
     // broadcast and join at BUCKET granularity; only matching buckets'
     // member lists explode, so candidate volume is bounded by
     // cap × |matching buckets| instead of bucket² mass.
-    val idx = bands.filter(!isBatch)
-      .groupBy(col("band"), col("bkey"))
-      .agg(expr(s"graft_capped_longs(doc_id, ${LshBucketCap + 1})").as("raw"),
-        count(lit(1)).as("c"))
-      .filter(col("c") <= LshBucketCap)
-    val cand = idx
+    val cand = cappedBuckets(bands.filter(!isBatch), LshBucketCap, "band", "bkey")
       .join(broadcast(bands.filter(isBatch)), Seq("band", "bkey"))
       .select(col("doc_id").as("new_doc"), explode(col("raw")).as("dup_of"))
       .distinct()
-    val isets = shx
-      .withColumn("shid", expr("CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT)"))
-      .groupBy("doc_id")
-      .agg(collect_list(col("shid")).as("iset"), count(lit(1)).as("sz"))
-      .cache()
-    cand
-      .join(isets.select(col("doc_id").as("new_doc"), col("iset").as("sa"),
-        col("sz").as("za")), "new_doc")
-      .join(isets.select(col("doc_id").as("dup_of"), col("iset").as("sb"),
-        col("sz").as("zb")), "dup_of")
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("jaccard", expr("CAST(i AS DOUBLE) / (za + zb - i)"))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select(col("new_doc"), col("dup_of"), col("jaccard"))
-      .orderBy("new_doc", "dup_of")
+    verifiedJaccard(cand, isets, "new_doc", "dup_of").orderBy("new_doc", "dup_of")
   }
 
   /** Document-frequency cutoff for the Jaccard inverted index: shingles
@@ -391,9 +391,7 @@ object DedupQueries {
     val sizes = cold.select(explode(col("docs")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val common = cold
-      .select(col("source"), explode(expr(
-        "flatten(transform(docs, (x, i) -> transform(slice(docs, i + 2, size(docs)), y -> named_struct('a', x, 'b', y))))"
-      )).as("p"))
+      .select(col("source"), explode(expr(PairsOfSorted)).as("p"))
       .groupBy(col("p.a").as("doc_a"), col("source"), col("p.b").as("doc_b"))
       .agg(count(lit(1)).as("i"))
     common
@@ -419,8 +417,7 @@ object DedupQueries {
   }
 
   /** Spark side of the signature pipeline: (doc_id, sig). */
-  private def simhashSigs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private def simhashSigs(spark: SparkSession, dir: String): DataFrame = {
     val tokh = documents(spark, dir)
       .withColumn("tk", split(col("text"), " "))
       .select(col("doc_id"), explode(array_distinct(col("tk"))).as("t"))
@@ -567,16 +564,7 @@ object DedupQueries {
     val keys = sigs.crossJoin(broadcast(bp))
       .selectExpr("doc_id", "pid",
         s"((sig div di) % $bandMod) * $bandMod + ((sig div dj) % $bandMod) AS kv")
-    val cand = keys.groupBy("pid", "kv")
-      .agg(expr(s"graft_capped_longs(doc_id, ${SimhashBlockCap + 1})").as("raw"),
-        count(lit(1)).as("c"))
-      .filter(col("c") <= SimhashBlockCap)
-      .select(sort_array(col("raw")).as("docs"))
-      .select(explode(expr(
-        "flatten(transform(docs, (x, i) -> transform(slice(docs, i + 2, size(docs)), y -> named_struct('a', x, 'b', y))))"
-      )).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b")).distinct()
-    cand
+    sortedPairs(cappedBuckets(keys, SimhashBlockCap, "pid", "kv"))
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
       .withColumn("hamming", expr("CAST(bit_count(sa ^ sb) AS BIGINT)"))
@@ -683,7 +671,7 @@ object DedupQueries {
   /** [[bloomDedup]]'s core over any (doc_id, text) table — also driven
     * by BloomSpec with planted duplicates.
     */
-  def bloomDedupLedger(docsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def bloomDedupLedger(docsIn: DataFrame): DataFrame = {
     val corpus = docsIn.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     val batch = docsIn.filter(col("doc_id") % 5 === 0).select("doc_id", "text")
     // corpus-adaptive filter size — a driver-side count, the
@@ -691,7 +679,7 @@ object DedupQueries {
     val m = 1L << Embed.adaptiveBits(32L * corpus.count(), 16, 1)
     def posCol(i: Int) =
       expr(s"CAST(conv(substr(md5(concat('$i|', text)), 1, 15), 16, 10) AS BIGINT) % $m")
-    def positions(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"),
+    def positions(df: DataFrame) = df.select(col("doc_id"),
       explode(array((0 until BloomK).map(posCol): _*)).as("p"))
     val idx = positions(corpus)
       .groupBy(expr("p div 62").as("w"))
@@ -733,12 +721,7 @@ object DedupQueries {
     */
   val spanDedup = QueryDef.sql(
     "llm_span_dedup",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-       |spans AS (SELECT doc_id,
-       |    unnest(range(1, len(tk) - 6)) AS pos,
-       |    unnest(list_transform(${Text.wordNgramsSql(8, distinct = false)},
-       |                          g -> ${Text.hexPrefixInt60Sql("md5(g)")})) AS h
-       |  FROM toks),
+    s"""WITH $spanCtesSql,
        |packed AS (SELECT doc_id, h, doc_id * 1048576 + pos AS pack FROM spans),
        |stats AS (SELECT h, count(*) AS cnt, min(pack) AS keeper
        |          FROM packed GROUP BY h),
@@ -758,10 +741,21 @@ object DedupQueries {
        |ORDER BY d.doc_id""".stripMargin
   ) { (spark, dir) => spanDedupLedger(documents(spark, dir)) }
 
+  /** DuckDB CTEs `toks`, `spans(doc_id, pos, h)`: every word-8-gram
+    * occurrence with its 1-based position and 60-bit hash.
+    */
+  private def spanCtesSql: String =
+    s"""toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+       |spans AS (SELECT doc_id,
+       |    unnest(range(1, len(tk) - 6)) AS pos,
+       |    unnest(list_transform(${Text.wordNgramsSql(8, distinct = false)},
+       |                          g -> ${Text.hexPrefixInt60Sql("md5(g)")})) AS h
+       |  FROM toks)""".stripMargin
+
   /** [[spanDedup]]'s core over any (doc_id, text) table — also driven by
     * SpanDedupSpec on a planted-duplicate corpus.
     */
-  def spanDedupLedger(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def spanDedupLedger(docs: DataFrame): DataFrame = {
     val spans = docs
       .withColumn("tk", split(col("text"), " "))
       .select(col("doc_id"),
@@ -779,7 +773,7 @@ object DedupQueries {
     // relation"). The window computes both aggregates in ONE shuffle of
     // the span stream through a spillable sort; per-group buffering is
     // bounded by a span's duplication count, never by the corpus.
-    val wh = org.apache.spark.sql.expressions.Window.partitionBy("h")
+    val wh = Window.partitionBy("h")
     val perDoc = spans
       .withColumn("cnt", count(lit(1)).over(wh))
       .withColumn("keeper", min("pack").over(wh))
@@ -823,12 +817,7 @@ object DedupQueries {
     */
   val dupSpanMerge = QueryDef.sql(
     "llm_dup_span_merge",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-       |spans AS (SELECT doc_id,
-       |    unnest(range(1, len(tk) - 6)) AS pos,
-       |    unnest(list_transform(${Text.wordNgramsSql(8, distinct = false)},
-       |                          g -> ${Text.hexPrefixInt60Sql("md5(g)")})) AS h
-       |  FROM toks),
+    s"""WITH $spanCtesSql,
        |packed AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos, h,
        |    doc_id * 1048576 + pos AS pack FROM spans),
        |stats AS (SELECT h, count(*) AS cnt, min(pack) AS keeper
@@ -858,7 +847,7 @@ object DedupQueries {
     * by DupSpanMergeSpec on a planted corpus (overlap merge, touching
     * merge, gap split, keeper exclusion).
     */
-  def dupSpanMergeRanges(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def dupSpanMergeRanges(docs: DataFrame): DataFrame = {
     val spans = docs
       .withColumn("tk", split(col("text"), " "))
       .select(col("doc_id"),
@@ -950,7 +939,7 @@ object DedupQueries {
   /** [[paragraphDedup]]'s core over any (doc_id, text) table — also
     * driven by SpanDedupSpec's planted-boilerplate corpus.
     */
-  def paragraphDedupLedger(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def paragraphDedupLedger(docs: DataFrame): DataFrame = {
     val units = docs
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .withColumn("n", size(col("tk")).cast("long"))
@@ -962,7 +951,7 @@ object DedupQueries {
         expr("doc_id * CAST(1048576 AS BIGINT) + bi").as("pack"))
     // span_dedup's window shape: both per-hash stats in ONE spillable
     // shuffle, never a corpus-sized hash relation (the sf100 lesson)
-    val wh = org.apache.spark.sql.expressions.Window.partitionBy("h")
+    val wh = Window.partitionBy("h")
     units
       .withColumn("cnt", count(lit(1)).over(wh))
       .withColumn("later", when(col("pack") =!= min("pack").over(wh), 1).otherwise(0))
@@ -1059,7 +1048,7 @@ object DedupQueries {
     * are bit-identical to the DuckDB oracle, which still spells the
     * window form — the oracle defines WHAT, this plan is the HOW.
     */
-  def cdcChunkLedger(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def cdcChunkLedger(docs: DataFrame): DataFrame = {
     val chunks = docs
       .select(col("doc_id"),
         explode(expr(s"cdc_chunks(split(text, ' '), $CdcMod)")).as("c"))
@@ -1101,8 +1090,7 @@ object DedupQueries {
     * with label = min node id reachable from each node. Core of
     * [[dedupClusters]]; exposed for the chain-convergence spec.
     */
-  private[graft] def minLabelComponents(nodes: org.apache.spark.sql.DataFrame,
-      pairEdges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def minLabelComponents(nodes: DataFrame, pairEdges: DataFrame): DataFrame = {
     val edges = pairEdges.toDF("src", "dst")
     val undirected = edges.unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -1113,7 +1101,7 @@ object DedupQueries {
     // fresh LogicalRDD truncates the plan like a checkpoint would, but
     // keeps cache()/unpersist() lifecycle control (localCheckpoint pins
     // its blocks until GC with no public API to free them eagerly).
-    def fence(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    def fence(df: DataFrame): DataFrame = {
       val out = df.sparkSession.createDataFrame(df.rdd, df.schema)
       out.cache(); out.count()
       out
@@ -1187,23 +1175,30 @@ object DedupQueries {
     */
   val dedupClusters = QueryDef.sql(
     "llm_dedup_clusters",
-    s"""WITH RECURSIVE $minhashPairsCtes,
-       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |reach(node, label) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.node),
-       |lab AS (SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node),
+    s"""WITH $clusterLabelCtesSql,
        |sz AS (SELECT cluster_id, count(*) AS cluster_size FROM lab GROUP BY cluster_id)
        |SELECT l.doc_id, l.cluster_id, s.cluster_size,
        |       s.cluster_size > 1 AS is_dup_cluster
        |FROM lab l JOIN sz s USING (cluster_id)
        |ORDER BY l.doc_id""".stripMargin
   ) { (spark, dir) =>
-    // label propagation JOINS the pair stream every round — read it from
-    // the pair parquet SessionCache builds once per app+dir (r12 verdict
-    // item 4) and cache the tiny edge frame for the loop's rounds
+    val labels = clusterLabels(spark, dir)
+    val sz = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
+    labels.join(sz, "label")
+      .select(col("node").as("doc_id"), col("label").as("cluster_id"),
+        col("cluster_size"), (col("cluster_size") > 1).as("is_dup_cluster"))
+      .orderBy("doc_id")
+  }
+
+  /** Near-dup cluster labels (node, label) over every document: label
+    * propagation ([[minLabelComponents]]) over the verified MinHash pairs.
+    * Label propagation JOINS the pair stream every round (uncached, the
+    * whole MinHash pipeline re-derives per round — the 10× probe read 5.55
+    * uncached vs ~1.9 cached), so it reads the pair parquet SessionCache
+    * builds once per app+dir (r12 verdict item 4) and caches that tiny
+    * edge frame for the rounds.
+    */
+  private def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashPairsMaterialized(spark, dir)
       .select(col("doc_a"), col("doc_b")).cache()
     val nodes = documents(spark, dir).select(col("doc_id").as("node"))
@@ -1212,12 +1207,21 @@ object DedupQueries {
     // pair stream's last consumer has already run — release it now instead
     // of holding |pairs| blocks for the rest of the session
     pairs.unpersist()
-    val sz = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sz, "label")
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"),
-        col("cluster_size"), (col("cluster_size") > 1).as("is_dup_cluster"))
-      .orderBy("doc_id")
+    labels
   }
+
+  /** DuckDB twin of [[clusterLabels]]: `RECURSIVE` and the CTEs ending in
+    * `lab(doc_id, cluster_id)` (the min reachable doc_id).
+    */
+  private def clusterLabelCtesSql: String =
+    s"""RECURSIVE $minhashPairsCtes,
+       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+       |reach(node, label) AS (
+       |  SELECT doc_id, doc_id FROM documents
+       |  UNION
+       |  SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.node),
+       |lab AS (SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node)""".stripMargin
 
   // ---- canonical-URL dedup: crawl re-fetch collapse ----
 
@@ -1381,14 +1385,7 @@ object DedupQueries {
     */
   val splitLeakage = QueryDef.sql(
     "llm_split_leakage",
-    s"""WITH RECURSIVE $minhashPairsCtes,
-       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |reach(node, label) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.node),
-       |lab AS (SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node),
+    s"""WITH $clusterLabelCtesSql,
        |sp AS (SELECT doc_id, $SplitCaseSql AS split
        |       FROM (SELECT doc_id, ${splitBucketSql("VARCHAR")} AS bucket
        |         FROM documents) b),
@@ -1404,19 +1401,8 @@ object DedupQueries {
        |FROM agg WHERE cluster_size > 1
        |ORDER BY cluster_id""".stripMargin
   ) { (spark, dir) =>
-    // cache the verified pair stream — label propagation JOINS it every
-    // round, and an uncached edge set re-derives the whole MinHash
-    // pipeline per round (the 10x probe read 5.55 uncached vs ~1.9
-    // cached — the dedupClusters discipline); sourced from the pair
-    // parquet SessionCache builds once per app+dir (r12 verdict item 4)
-    val pairs = minhashPairsMaterialized(spark, dir)
-      .select(col("doc_a"), col("doc_b")).cache()
-    val nodes = documents(spark, dir).select(col("doc_id").as("node"))
-    val labels = minLabelComponents(nodes, pairs.toDF("src", "dst"))
+    val labels = clusterLabels(spark, dir)
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-    // the CC fixpoint is already materialized (fenced) — drop the pair
-    // cache here rather than carrying it past the entry (r11 verdict)
-    pairs.unpersist()
     val sp = documents(spark, dir)
       .selectExpr("doc_id", s"${splitBucketSql("STRING")} AS bucket")
       .selectExpr("doc_id", s"$SplitCaseSql AS split")
@@ -1452,18 +1438,8 @@ object DedupQueries {
     */
   val clusterBest = QueryDef.sql(
     "llm_cluster_best",
-    s"""WITH RECURSIVE $minhashPairsCtes,
-       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |reach(node, label) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.node),
-       |lab AS (SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node),
-       |qual AS (SELECT doc_id, $qualityExpr AS quality FROM (
-       |    SELECT doc_id,
-       |      $qualityMetricsSql
-       |    FROM (SELECT doc_id, text, string_split(text, ' ') AS tk FROM documents) d) m),
+    s"""WITH $clusterLabelCtesSql,
+       |${qualCteSql("(SELECT doc_id, text, string_split(text, ' ') AS tk FROM documents) d")},
        |ranked AS (SELECT l.doc_id, l.cluster_id, q.quality,
        |    row_number() OVER (PARTITION BY l.cluster_id
        |                       ORDER BY q.quality DESC, l.doc_id) AS rn
@@ -1472,23 +1448,11 @@ object DedupQueries {
        |  CASE WHEN rn = 1 THEN 'keep' ELSE 'drop_dup' END AS action
        |FROM ranked ORDER BY doc_id""".stripMargin
   ) { (spark, dir) =>
-    // pair stream from the pair parquet SessionCache builds once per
-    // app+dir (r12 verdict item 4) — cached for the propagation rounds, released after
-    val pairs = minhashPairsMaterialized(spark, dir)
-      .select(col("doc_a"), col("doc_b")).cache()
-    val nodes = documents(spark, dir).select(col("doc_id").as("node"))
-    val labels = minLabelComponents(nodes, pairs.toDF("src", "dst"))
+    val labels = clusterLabels(spark, dir)
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-    // same cache hygiene as dedupClusters/splitLeakage: the fixpoint is
-    // fenced, so the pair stream has no further consumer
-    pairs.unpersist()
-    val qual = documents(spark, dir)
-      .withColumn("tk", split(col("text"), " "))
-      .select(col("doc_id") +: qualityMetricCols: _*)
-      .select(col("doc_id"), expr(qualityExpr).as("quality"))
+    val qual = qualityOf(documents(spark, dir).withColumn("tk", split(col("text"), " ")))
     labels.join(qual, "doc_id")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("cluster_id").orderBy(col("quality").desc, col("doc_id"))))
+      .withColumn("rn", Ranked.rowNumber("cluster_id")(col("quality").desc, col("doc_id")))
       .selectExpr("doc_id", "cluster_id", "quality", "rn = 1 AS is_best",
         "CASE WHEN rn = 1 THEN 'keep' ELSE 'drop_dup' END AS action")
       .orderBy("doc_id")

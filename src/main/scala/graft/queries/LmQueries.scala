@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fixtures.Fixtures
 import graft.fixtures.Fixtures.documents
 import graft.llm.Text
 
@@ -13,6 +15,8 @@ import graft.llm.Text
   * next to its builder.
   */
 object LmQueries {
+  import Ranked.{rowNumber, topK}
+
   /** Language-ID: train char-trigram profiles (top-20 per language) from
     * the corpus, classify each doc by profile overlap. Real n-gram
     * lang-id architecture; the profile is tiny → broadcast join.
@@ -41,10 +45,8 @@ object LmQueries {
     // dedup'd map-side explode below) — single consumer, so no cache
     val exploded = docs
       .select(col("doc_id"), col("lang"), explode(expr(Text.charTrigramsExpr)).as("tri"))
-    val profile = exploded.groupBy("lang", "tri").agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("lang").orderBy(col("cnt").desc, col("tri"))))
-      .filter(col("rn") <= 20)
+    val profile = topK(exploded.groupBy("lang", "tri").agg(count(lit(1)).as("cnt")), "rn", 20)(
+        rowNumber("lang")(col("cnt").desc, col("tri")))
       .select(col("lang").as("plang"), col("tri"))
     // per-doc DISTINCT trigrams via the dedup'd codegen explode — a
     // map-side set-build per row, replacing a corpus-wide distinct()
@@ -125,7 +127,7 @@ object LmQueries {
     // (app, dir) — the train-once contract (BPE/kn_lm_model precedent);
     // holdout scoring stays per-rep
     langClassifyLedger(documents(spark, dir),
-      wt => graft.fixtures.Fixtures.derived(spark, dir, "langclassify_model")(wt))
+      wt => Fixtures.derived(spark, dir, "langclassify_model")(wt))
   }
 
   /** [[langClassify]]'s core over any (doc_id, lang, text) table — also
@@ -133,9 +135,8 @@ object LmQueries {
     * the registered entry memoize the trained weight table per session
     * (round 16) without changing the spec-driven default.
     */
-  def langClassifyLedger(docsIn: org.apache.spark.sql.DataFrame,
-      memoModel: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        identity): org.apache.spark.sql.DataFrame = {
+  def langClassifyLedger(docsIn: DataFrame,
+      memoModel: DataFrame => DataFrame = identity): DataFrame = {
     val docs = docsIn.select(col("doc_id"), col("lang"), split(col("text"), " ").as("tk"))
     val train = docs.filter(col("doc_id") % 5 =!= 0)
       .select(col("lang"), explode(col("tk")).as("w"))
@@ -285,44 +286,77 @@ object LmQueries {
   val lmScore = QueryDef.sql(
     "llm_lm_score",
     s"""WITH docs AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1
-       |        FROM (SELECT unnest(tk) AS w FROM docs) u GROUP BY w),
+       |${bigramModelCtesSql("docs")},
+       |${fluencySql("lm_fluency")}""".stripMargin
+  ) { (spark, dir) =>
+    val docs = documents(spark, dir).select(col("doc_id"), split(col("text"), " ").as("tk"))
+    fluency(docs, bigramScores(docs, "doc_id", bigramModel(docs)), "lm_fluency")
+  }
+
+  /** The bigram LM trained on the (tk) rows of `train`, as (bg, q) with
+    * q = (count(bg)·[[LmQuantum]]) div count(first word of bg).
+    */
+  private def bigramModel(train: DataFrame): DataFrame = {
+    val uni = train.select(explode(col("tk")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c1"))
+    val bi = train.select(explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
+      .groupBy("bg").agg(count(lit(1)).as("c2"))
+    bi.withColumn("w", expr("split(bg, ' ')[0]"))
+      .join(uni, "w")
+      .selectExpr("bg", s"(c2 * CAST($LmQuantum AS BIGINT)) div c1 AS q")
+  }
+
+  /** DuckDB twin of [[bigramModel]]: CTEs `uni`, `bi`, `q` over the (tk)
+    * rows of CTE `from`.
+    */
+  private def bigramModelCtesSql(from: String): String =
+    s"""uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1
+       |        FROM (SELECT unnest(tk) AS w FROM $from) u GROUP BY w),
        |bi AS (SELECT bg, CAST(count(*) AS BIGINT) AS c2
        |       FROM (SELECT unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
-       |             FROM docs) b GROUP BY bg),
+       |             FROM $from) b GROUP BY bg),
        |q AS (SELECT bg, (c2 * $LmQuantum) // c1 AS q
-       |      FROM bi JOIN uni ON string_split(bg, ' ')[1] = uni.w),
-       |scored AS (SELECT doc_id, CAST(sum(q) AS BIGINT) AS sum_q,
+       |      FROM bi JOIN uni ON string_split(bg, ' ')[1] = uni.w)""".stripMargin
+
+  /** Per-`key` sum of the model's q over the bigrams of `docs` (key, tk),
+    * the model side shuffle-hashed: (key, sum_q, n_bigrams). Bigrams the
+    * model lacks drop out of the inner join.
+    */
+  private def bigramScores(docs: DataFrame, key: String, q: DataFrame): DataFrame =
+    docs.select(col(key), explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
+      .join(q.hint("shuffle_hash"), "bg")
+      .groupBy(key).agg(sum("q").as("sum_q"), count(lit(1)).as("n_bigrams"))
+
+  /** DuckDB twin of [[bigramScores]] by doc_id: CTE `scored` over CTEs
+    * `docs` and `q`.
+    */
+  private def bigramScoredCteSql: String =
+    s"""scored AS (SELECT doc_id, CAST(sum(q) AS BIGINT) AS sum_q,
        |                  CAST(count(*) AS BIGINT) AS n_bigrams
        |           FROM (SELECT doc_id, unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
        |                 FROM docs) o JOIN q USING (bg)
-       |           GROUP BY doc_id)
-       |SELECT d.doc_id,
-       |  coalesce(n_bigrams, 0) AS n_bigrams,
-       |  coalesce(sum_q, 0) AS sum_q,
-       |  CASE WHEN coalesce(n_bigrams, 0) > 0 THEN sum_q // n_bigrams ELSE 0 END AS lm_fluency
-       |FROM docs d LEFT JOIN scored ON d.doc_id = scored.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-  ) { (spark, dir) =>
-    val docs = documents(spark, dir).select(col("doc_id"), split(col("text"), " ").as("tk"))
-    val uni = docs.select(explode(col("tk")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-    val bi = docs.select(explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c2"))
-    val q = bi.withColumn("w", expr("split(bg, ' ')[0]"))
-      .join(uni, "w")
-      .selectExpr("bg", s"(c2 * CAST($LmQuantum AS BIGINT)) div c1 AS q")
-    val scored = docs
-      .select(col("doc_id"), explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .join(q.hint("shuffle_hash"), "bg")
-      .groupBy("doc_id").agg(sum("q").as("sum_q"), count(lit(1)).as("n_bigrams"))
+       |           GROUP BY doc_id)""".stripMargin
+
+  /** Every doc of `docs` with its bigram count, score sum and mean score
+    * `name` (0 without bigrams), ordered by doc_id.
+    */
+  private def fluency(docs: DataFrame, scored: DataFrame, name: String): DataFrame =
     docs.select("doc_id").join(scored, Seq("doc_id"), "left")
       .selectExpr("doc_id",
         "coalesce(n_bigrams, CAST(0 AS BIGINT)) AS n_bigrams",
         "coalesce(sum_q, CAST(0 AS BIGINT)) AS sum_q",
-        "CASE WHEN coalesce(n_bigrams, 0) > 0 THEN sum_q div n_bigrams ELSE CAST(0 AS BIGINT) END AS lm_fluency")
+        s"CASE WHEN coalesce(n_bigrams, 0) > 0 THEN sum_q div n_bigrams ELSE CAST(0 AS BIGINT) END AS $name")
       .orderBy("doc_id")
-  }
+
+  /** DuckDB twin of [[fluency]] over [[bigramScoredCteSql]]. */
+  private def fluencySql(name: String): String =
+    s"""$bigramScoredCteSql
+       |SELECT d.doc_id,
+       |  coalesce(n_bigrams, 0) AS n_bigrams,
+       |  coalesce(sum_q, 0) AS sum_q,
+       |  CASE WHEN coalesce(n_bigrams, 0) > 0 THEN sum_q // n_bigrams ELSE 0 END AS $name
+       |FROM docs d LEFT JOIN scored ON d.doc_id = scored.doc_id
+       |ORDER BY d.doc_id""".stripMargin
 
   /** Deterministic OOV floor quantum: an out-of-vocabulary bigram scores
     * this instead of silently vanishing (round-5 verdict item #2 — the
@@ -355,13 +389,7 @@ object LmQueries {
     s"""WITH docs AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
        |train AS (SELECT doc_id, tk FROM docs WHERE doc_id % $LmHoldoutMod <> 0),
        |hold AS (SELECT doc_id, tk FROM docs WHERE doc_id % $LmHoldoutMod = 0),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1
-       |        FROM (SELECT unnest(tk) AS w FROM train) u GROUP BY w),
-       |bi AS (SELECT bg, CAST(count(*) AS BIGINT) AS c2
-       |       FROM (SELECT unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
-       |             FROM train) b GROUP BY bg),
-       |q AS (SELECT bg, (c2 * $LmQuantum) // c1 AS q
-       |      FROM bi JOIN uni ON string_split(bg, ' ')[1] = uni.w),
+       |${bigramModelCtesSql("train")},
        |obs AS (SELECT doc_id, unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
        |        FROM hold),
        |scored AS (SELECT doc_id,
@@ -380,16 +408,9 @@ object LmQueries {
     val docs = documents(spark, dir).select(col("doc_id"), split(col("text"), " ").as("tk"))
     val train = docs.filter(pmod(col("doc_id"), lit(LmHoldoutMod)) =!= 0)
     val hold = docs.filter(pmod(col("doc_id"), lit(LmHoldoutMod)) === 0)
-    val uni = train.select(explode(col("tk")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-    val bi = train.select(explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c2"))
-    val q = bi.withColumn("w", expr("split(bg, ' ')[0]"))
-      .join(uni, "w")
-      .selectExpr("bg", s"(c2 * CAST($LmQuantum AS BIGINT)) div c1 AS q")
     val scored = hold
       .select(col("doc_id"), explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .join(q.hint("shuffle_hash"), Seq("bg"), "left")
+      .join(bigramModel(train).hint("shuffle_hash"), Seq("bg"), "left")
       .groupBy("doc_id")
       .agg(sum(coalesce(col("q"), lit(LmOovFloorQ))).as("sum_q"),
         count(lit(1)).as("n_bigrams"),
@@ -450,17 +471,7 @@ object LmQueries {
        |        (($KnDiscDen * c2 - $KnDiscNum) * $LmQuantum) // ($KnDiscDen * c1)
        |        + ((($KnDiscNum * n1f * $LmQuantum) // ($KnDiscDen * c1)) * n1b) // n_types AS q
        |      FROM sp JOIN fw USING (w1) JOIN bw USING (w2) CROSS JOIN ty),
-       |scored AS (SELECT doc_id, CAST(sum(q) AS BIGINT) AS sum_q,
-       |                  CAST(count(*) AS BIGINT) AS n_bigrams
-       |           FROM (SELECT doc_id, unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
-       |                 FROM docs) o JOIN q USING (bg)
-       |           GROUP BY doc_id)
-       |SELECT d.doc_id,
-       |  coalesce(n_bigrams, 0) AS n_bigrams,
-       |  coalesce(sum_q, 0) AS sum_q,
-       |  CASE WHEN coalesce(n_bigrams, 0) > 0 THEN sum_q // n_bigrams ELSE 0 END AS kn_fluency
-       |FROM docs d LEFT JOIN scored ON d.doc_id = scored.doc_id
-       |ORDER BY d.doc_id""".stripMargin
+       |${fluencySql("kn_fluency")}""".stripMargin
   ) { (spark, dir) =>
     val docs = documents(spark, dir).select(col("doc_id"), split(col("text"), " ").as("tk"))
     val bi = docs.select(explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
@@ -474,21 +485,12 @@ object LmQueries {
     // (production trains LM stats once and ships them — the BPE
     // merge-table contract); memoized per (app, dir), released by
     // clearDerivedCache. Scoring below stays per-rep.
-    val q = graft.fixtures.Fixtures.derived(spark, dir, "kn_lm_model")(
+    val q = Fixtures.derived(spark, dir, "kn_lm_model")(
       sp.join(fw, "w1").join(bw, "w2").crossJoin(broadcast(ty))
         .selectExpr("bg",
           s"(($KnDiscDen * c2 - $KnDiscNum) * CAST($LmQuantum AS BIGINT)) div ($KnDiscDen * c1)" +
             s" + ((($KnDiscNum * n1f * CAST($LmQuantum AS BIGINT)) div ($KnDiscDen * c1)) * n1b) div n_types AS q"))
-    val scored = docs
-      .select(col("doc_id"), explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .join(q.hint("shuffle_hash"), "bg")
-      .groupBy("doc_id").agg(sum("q").as("sum_q"), count(lit(1)).as("n_bigrams"))
-    docs.select("doc_id").join(scored, Seq("doc_id"), "left")
-      .selectExpr("doc_id",
-        "coalesce(n_bigrams, CAST(0 AS BIGINT)) AS n_bigrams",
-        "coalesce(sum_q, CAST(0 AS BIGINT)) AS sum_q",
-        "CASE WHEN coalesce(n_bigrams, 0) > 0 THEN sum_q div n_bigrams ELSE CAST(0 AS BIGINT) END AS kn_fluency")
-      .orderBy("doc_id")
+    fluency(docs, bigramScores(docs, "doc_id", q), "kn_fluency")
   }
 
   // ---- DSIR-style data selection: hashed-feature importance weights ----
@@ -600,13 +602,7 @@ object LmQueries {
   val doremiWeight = QueryDef.sql(
     "llm_doremi_weight",
     s"""WITH docs AS (SELECT doc_id, source, string_split(text, ' ') AS tk FROM documents),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1
-       |        FROM (SELECT unnest(tk) AS w FROM docs) u GROUP BY w),
-       |bi AS (SELECT bg, CAST(count(*) AS BIGINT) AS c2
-       |       FROM (SELECT unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
-       |             FROM docs) b GROUP BY bg),
-       |q AS (SELECT bg, (c2 * $LmQuantum) // c1 AS q
-       |      FROM bi JOIN uni ON string_split(bg, ' ')[1] = uni.w),
+       |${bigramModelCtesSql("docs")},
        |obs AS (SELECT source, unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
        |        FROM docs),
        |persrc AS (SELECT source, CAST(sum(q) AS BIGINT) AS sum_q,
@@ -631,18 +627,7 @@ object LmQueries {
   ) { (spark, dir) =>
     val docs = documents(spark, dir)
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("tk"))
-    val uni = docs.select(explode(col("tk")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-    val bi = docs.select(explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c2"))
-    val q = bi.withColumn("w", expr("split(bg, ' ')[0]"))
-      .join(uni, "w")
-      .selectExpr("bg", s"(c2 * CAST($LmQuantum AS BIGINT)) div c1 AS q")
-    val persrc = docs
-      .select(col("source"), explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .join(q.hint("shuffle_hash"), "bg")
-      .groupBy("source").agg(sum("q").as("sum_q"), count(lit(1)).as("n_bigrams"))
-      .cache()
+    val persrc = bigramScores(docs, "source", bigramModel(docs)).cache()
     val nd = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
     // coalesce chain keeps every source in the ledger: a domain whose
     // docs carry no bigrams at all (all single-token) has no LM
@@ -689,18 +674,8 @@ object LmQueries {
   val ccnetBucket = QueryDef.sql(
     "llm_ccnet_bucket",
     s"""WITH docs AS (SELECT doc_id, lang, string_split(text, ' ') AS tk FROM documents),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1
-       |        FROM (SELECT unnest(tk) AS w FROM docs) u GROUP BY w),
-       |bi AS (SELECT bg, CAST(count(*) AS BIGINT) AS c2
-       |       FROM (SELECT unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
-       |             FROM docs) b GROUP BY bg),
-       |q AS (SELECT bg, (c2 * $LmQuantum) // c1 AS q
-       |      FROM bi JOIN uni ON string_split(bg, ' ')[1] = uni.w),
-       |scored AS (SELECT doc_id, CAST(sum(q) AS BIGINT) AS sum_q,
-       |                  CAST(count(*) AS BIGINT) AS n_bigrams
-       |           FROM (SELECT doc_id, unnest(${Text.wordNgramsSql(2, distinct = false)}) AS bg
-       |                 FROM docs) o JOIN q USING (bg)
-       |           GROUP BY doc_id),
+       |${bigramModelCtesSql("docs")},
+       |$bigramScoredCteSql,
        |flu AS (SELECT d.doc_id, d.lang,
        |    CASE WHEN coalesce(n_bigrams, 0) > 0 THEN sum_q // n_bigrams ELSE 0 END AS lm_fluency
        |  FROM docs d LEFT JOIN scored ON d.doc_id = scored.doc_id),
@@ -722,25 +697,15 @@ object LmQueries {
   ) { (spark, dir) =>
     val docs = documents(spark, dir)
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tk"))
-    val uni = docs.select(explode(col("tk")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-    val bi = docs.select(explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c2"))
     // round 16: the bigram LM table is a TRAINED artifact (the
     // kn_lm_model/BPE train-once contract) — memoized per (app, dir);
     // scoring stays per-rep.
-    val q = graft.fixtures.Fixtures.derived(spark, dir, "ccnet_lm_model")(
-      bi.withColumn("w", expr("split(bg, ' ')[0]"))
-        .join(uni, "w")
-        .selectExpr("bg", s"(c2 * CAST($LmQuantum AS BIGINT)) div c1 AS q"))
-    val scored = docs
-      .select(col("doc_id"), explode(expr("word_ngrams(tk, 2, false)")).as("bg"))
-      .join(q.hint("shuffle_hash"), "bg")
-      .groupBy("doc_id").agg(sum("q").as("sum_q"), count(lit(1)).as("n_bigrams"))
+    val q = Fixtures.derived(spark, dir, "ccnet_lm_model")(bigramModel(docs))
+    val scored = bigramScores(docs, "doc_id", q)
     // materialize (round 16, guide §5): flu feeds BOTH the histogram
     // window chain (thr) and the final bucket join — left lazy the whole
     // corpus scoring join executed twice per rep
-    val flu = graft.fixtures.Fixtures.materialized(docs.select("doc_id", "lang")
+    val flu = Fixtures.materialized(docs.select("doc_id", "lang")
       .join(scored, Seq("doc_id"), "left")
       .selectExpr("doc_id", "lang",
         "CASE WHEN coalesce(n_bigrams, 0) > 0 THEN sum_q div n_bigrams ELSE CAST(0 AS BIGINT) END AS lm_fluency"))
@@ -797,15 +762,10 @@ object LmQueries {
   val bpeTrain = QueryDef.sql(
     "llm_bpe_train", {
       val rounds = (1 to BpeRounds).map { k =>
-        val prev = s"st${k - 1}"
-        s"""pc$k AS (SELECT pr, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-           |    SELECT freq, unnest(list_transform(range(1, len(tk)), i -> concat(tk[i], ' ', tk[i+1]))) AS pr
-           |    FROM (SELECT freq, list_filter(string_split(st, '|'), x -> x <> '') AS tk FROM $prev) t$k) u$k
-           |  GROUP BY pr),
-           |m$k AS (SELECT pr, cnt FROM pc$k ORDER BY cnt DESC, pr LIMIT 1),
+        s"""${bpePickCtesSql(k)},
            |st$k AS (SELECT word, freq,
            |    replace(replace(replace(st, p.pat, p.rep), p.pat, p.rep), p.pat, p.rep) AS st
-           |  FROM $prev, (SELECT concat('|', split_part(pr, ' ', 1), '|', split_part(pr, ' ', 2), '|') AS pat,
+           |  FROM st${k - 1}, (SELECT concat('|', split_part(pr, ' ', 1), '|', split_part(pr, ' ', 2), '|') AS pat,
            |               concat('|', replace(pr, ' ', ''), '|') AS rep FROM m$k) p)""".stripMargin
       }.mkString(",\n")
       val out = (1 to BpeRounds).map { k =>
@@ -813,10 +773,7 @@ object LmQueries {
            |  split_part(pr, ' ', 2) AS rhs, replace(pr, ' ', '') AS merged, cnt AS pair_count
            |FROM m$k""".stripMargin
       }.mkString("\nUNION ALL\n")
-      s"""WITH st0 AS (SELECT word, CAST(count(*) AS BIGINT) AS freq,
-         |    concat('|', regexp_replace(word, '(.)', '\\1|', 'g')) AS st
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) w
-         |  GROUP BY word),
+      s"""WITH $bpeWordsCteSql,
          |$rounds
          |$out
          |ORDER BY merge_round""".stripMargin
@@ -827,6 +784,25 @@ object LmQueries {
       .toDF("merge_round", "lhs", "rhs", "merged", "pair_count")
       .orderBy("merge_round")
   }
+
+  /** DuckDB CTE `st0(word, freq, st)`: the corpus word table, each word
+    * framed `|c|h|a|r|`.
+    */
+  private def bpeWordsCteSql: String =
+    s"""st0 AS (SELECT word, CAST(count(*) AS BIGINT) AS freq,
+       |    concat('|', regexp_replace(word, '(.)', '\\1|', 'g')) AS st
+       |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) w
+       |  GROUP BY word)""".stripMargin
+
+  /** DuckDB CTEs of BPE round `k` over the word table `st{k-1}`: the
+    * weighted pair counts `pc{k}` and the winning pair `m{k}(pr, cnt)`.
+    */
+  private def bpePickCtesSql(k: Int): String =
+    s"""pc$k AS (SELECT pr, CAST(sum(freq) AS BIGINT) AS cnt FROM (
+       |    SELECT freq, unnest(list_transform(range(1, len(tk)), i -> concat(tk[i], ' ', tk[i+1]))) AS pr
+       |    FROM (SELECT freq, list_filter(string_split(st, '|'), x -> x <> '') AS tk FROM st${k - 1}) t$k) u$k
+       |  GROUP BY pr),
+       |m$k AS (SELECT pr, cnt FROM pc$k ORDER BY cnt DESC, pr LIMIT 1)""".stripMargin
 
   /** The training loop shared by [[bpeTrain]] (emits the merge table)
     * and [[bpeApply]] (inlines the merges into the tokenizer): one
@@ -848,15 +824,15 @@ object LmQueries {
     * bpe_train 1.6 → 0.08 s warm, bpe_apply 2.1 → 0.5 s, bpe_fertility
     * 2.0 → 0.25 s at sf0.1.
     */
-  private def bpeMerges(spark: org.apache.spark.sql.SparkSession,
+  private def bpeMerges(spark: SparkSession,
       dir: String): Seq[(Long, String, String, String, Long)] =
     graft.fixtures.SessionCache(graft.fixtures.SessionCache.Application,
       "bpe#" + spark.sparkContext.applicationId + "#" + dir)(
       bpeMergesBuild(spark, dir))
 
-  private def bpeMergesBuild(spark: org.apache.spark.sql.SparkSession,
+  private def bpeMergesBuild(spark: SparkSession,
       dir: String): Seq[(Long, String, String, String, Long)] = {
-    def fence(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    def fence(df: DataFrame): DataFrame = {
       val out = df.sparkSession.createDataFrame(df.rdd, df.schema)
       out.cache(); out.count()
       out
@@ -915,27 +891,19 @@ object LmQueries {
     */
   private lazy val bpeDocCtesSql: String = {
     val rounds = (1 to BpeRounds).map { k =>
-      val prev = s"st${k - 1}"
-      s"""pc$k AS (SELECT pr, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-         |    SELECT freq, unnest(list_transform(range(1, len(tk)), i -> concat(tk[i], ' ', tk[i+1]))) AS pr
-         |    FROM (SELECT freq, list_filter(string_split(st, '|'), x -> x <> '') AS tk FROM $prev) t$k) u$k
-         |  GROUP BY pr),
-         |m$k AS (SELECT pr, cnt FROM pc$k ORDER BY cnt DESC, pr LIMIT 1),
+      s"""${bpePickCtesSql(k)},
          |mp$k AS (SELECT concat('|', split_part(pr, ' ', 1), '|', split_part(pr, ' ', 2), '|') AS pat,
          |         concat('|', replace(pr, ' ', ''), '|') AS rep FROM m$k),
          |st$k AS (SELECT word, freq,
          |    replace(replace(replace(st, p.pat, p.rep), p.pat, p.rep), p.pat, p.rep) AS st
-         |  FROM $prev, mp$k p)""".stripMargin
+         |  FROM st${k - 1}, mp$k p)""".stripMargin
     }.mkString(",\n")
     val docRounds = (1 to BpeRounds).map { k =>
       s"""doc$k AS (SELECT doc_id,
          |    replace(replace(replace(st, p.pat, p.rep), p.pat, p.rep), p.pat, p.rep) AS st
          |  FROM doc${k - 1}, mp$k p)""".stripMargin
     }.mkString(",\n")
-    s"""st0 AS (SELECT word, CAST(count(*) AS BIGINT) AS freq,
-       |    concat('|', regexp_replace(word, '(.)', '\\1|', 'g')) AS st
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents) w
-       |  GROUP BY word),
+    s"""$bpeWordsCteSql,
        |$rounds,
        |doc0 AS (SELECT doc_id,
        |    concat('|', regexp_replace(text, '(.)', '\\1|', 'g')) AS st
@@ -952,6 +920,19 @@ object LmQueries {
        |  md5(st) AS tok_hash
        |FROM doc$BpeRounds ORDER BY doc_id""".stripMargin
   ) { (spark, dir) =>
+    bpeTokenized(spark, dir)
+      .selectExpr("doc_id",
+        "CAST(size(filter(split(st, '[|]'), x -> x <> '' AND x <> ' ')) AS BIGINT) AS n_tokens_bpe",
+        "CAST(size(filter(split(st, '[|]'), x -> length(x) > 1)) AS BIGINT) AS n_merged",
+        "md5(st) AS tok_hash")
+      .orderBy("doc_id")
+  }
+
+  /** The documents with `st`, each text framed (`|c|h|a|r|`) and run
+    * through the learned merges in round order — the map-side tokenizer
+    * [[bpeApply]] and [[bpeFertility]] count over.
+    */
+  private def bpeTokenized(spark: SparkSession, dir: String): DataFrame = {
     val chain = bpeMerges(spark, dir).foldLeft("st") { case (acc, (_, a, b, _, _)) =>
       val (pat, rep) = (s"|$a|$b|", s"|$a$b|")
       s"replace(replace(replace($acc, '$pat', '$rep'), '$pat', '$rep'), '$pat', '$rep')"
@@ -959,11 +940,6 @@ object LmQueries {
     documents(spark, dir)
       .withColumn("st", concat(lit("|"), regexp_replace(col("text"), "(.)", "$1|")))
       .withColumn("st", expr(chain))
-      .selectExpr("doc_id",
-        "CAST(size(filter(split(st, '[|]'), x -> x <> '' AND x <> ' ')) AS BIGINT) AS n_tokens_bpe",
-        "CAST(size(filter(split(st, '[|]'), x -> length(x) > 1)) AS BIGINT) AS n_merged",
-        "md5(st) AS tok_hash")
-      .orderBy("doc_id")
   }
 
   /** Tokenizer fertility ledger: BPE tokens per word and characters per
@@ -992,13 +968,7 @@ object LmQueries {
        |FROM per_doc p JOIN documents d USING (doc_id)
        |GROUP BY d.lang ORDER BY d.lang""".stripMargin
   ) { (spark, dir) =>
-    val chain = bpeMerges(spark, dir).foldLeft("st") { case (acc, (_, a, b, _, _)) =>
-      val (pat, rep) = (s"|$a|$b|", s"|$a$b|")
-      s"replace(replace(replace($acc, '$pat', '$rep'), '$pat', '$rep'), '$pat', '$rep')"
-    }
-    documents(spark, dir)
-      .withColumn("st", concat(lit("|"), regexp_replace(col("text"), "(.)", "$1|")))
-      .withColumn("st", expr(chain))
+    bpeTokenized(spark, dir)
       .selectExpr("doc_id", "lang",
         "CAST(size(filter(split(st, '[|]'), x -> x <> '' AND x <> ' ')) AS BIGINT) AS n_tok",
         "CAST(size(split(text, ' ')) AS BIGINT) AS n_words",

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,6 +14,8 @@ import graft.llm.Text
   * DuckDB twin sits next to its builder.
   */
 object QualityQueries {
+  import Ranked.{rowNumber, topK}
+
   /** Text statistics: token counts, distinct tokens, stopword hits, exact
     * char length, mean token length. All integers + one deterministic
     * double division.
@@ -66,6 +69,20 @@ object QualityQueries {
     expr("CAST(size(array_distinct(tk)) AS BIGINT)").as("n_uniq"),
     expr("CAST(size(filter(tk, t -> t IN ('the', 'a'))) AS BIGINT)").as("stop_cnt"),
     expr("CAST(length(text) AS BIGINT)").as("n_chars"))
+
+  /** (doc_id, quality) of a (doc_id, text, tk) table. */
+  private[queries] def qualityOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id") +: qualityMetricCols: _*)
+      .select(col("doc_id"), expr(qualityExpr).as("quality"))
+
+  /** DuckDB twin of [[qualityOf]]: CTE `qual` over a (doc_id, text, tk)
+    * relation `from`.
+    */
+  private[queries] def qualCteSql(from: String): String =
+    s"""qual AS (SELECT doc_id, $qualityExpr AS quality FROM (
+       |    SELECT doc_id,
+       |      $qualityMetricsSql
+       |    FROM $from) m)""".stripMargin
 
   val qualityScore = QueryDef.sql(
     "llm_quality_score",
@@ -189,8 +206,8 @@ object QualityQueries {
   /** Spark twin of [[contamCtesSql]]'s `hits`: per-doc count of distinct
     * eval-set n-grams. `docs` needs (doc_id, tk).
     */
-  private def benchHits(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private def benchHits(docs: DataFrame)
+      : DataFrame = {
     val ngrams = docs.select(col("doc_id"),
       explode(expr(s"word_ngrams(tk, $ContamN, true)")).as("ng"))
     val bench = ngrams.filter(col("doc_id") % BenchMod === 0)
@@ -298,8 +315,7 @@ object QualityQueries {
     documents(spark, dir)
       .selectExpr("doc_id", s"${richPiiExpr("STRING")} AS rich")
       .selectExpr("doc_id", s"split(regexp_extract(rich, '$UrlPat', 0), '/')[2] AS host")
-      .withColumn("host_rank", row_number().over(
-        Window.partitionBy("host").orderBy("doc_id")).cast("long"))
+      .withColumn("host_rank", rowNumber("host")(col("doc_id")).cast("long"))
       .select(col("doc_id"), col("host"), col("host_rank"),
         (col("host_rank") <= HostCap).as("keep"))
       .orderBy("doc_id")
@@ -502,10 +518,7 @@ object QualityQueries {
   val curation = QueryDef.sql(
     "llm_curation",
     s"""WITH docs AS (SELECT doc_id, text, string_split(text, ' ') AS tk FROM documents),
-       |qual AS (SELECT doc_id, $qualityExpr AS quality FROM (
-       |    SELECT doc_id,
-       |      $qualityMetricsSql
-       |    FROM docs) m),
+       |${qualCteSql("docs")},
        |h AS (SELECT doc_id, md5(text) AS th FROM docs),
        |canon AS (SELECT th, min(doc_id) AS canonical_id FROM h GROUP BY th),
        |dup AS (SELECT doc_id, canonical_id <> doc_id AS exact_dup
@@ -522,15 +535,12 @@ object QualityQueries {
   ) { (spark, dir) =>
     val docs = documents(spark, dir)
       .select(col("doc_id"), col("text"), split(col("text"), " ").as("tk"))
-    val qual = docs
-      .select(col("doc_id") +: qualityMetricCols: _*)
-      .select(col("doc_id"), expr(qualityExpr).as("quality"))
     val h = docs.select(col("doc_id"), md5(col("text")).as("th"))
     val canon = h.groupBy("th").agg(min("doc_id").as("canonical_id"))
     val dup = h.join(canon, "th")
       .select(col("doc_id"), (col("canonical_id") =!= col("doc_id")).as("exact_dup"))
     docs.select("doc_id")
-      .join(qual, "doc_id").join(dup, "doc_id")
+      .join(qualityOf(docs), "doc_id").join(dup, "doc_id")
       .join(benchHits(docs), Seq("doc_id"), "left")
       .withColumn("bench_hits", coalesce(col("bench_ngram_hits"), lit(0L)))
       .selectExpr("doc_id", "quality", s"$curationReasonSql AS reason",
@@ -555,10 +565,27 @@ object QualityQueries {
     * through one partition (N ≈ 10¹⁸) would want a third level; two
     * levels cover every real corpus.
     */
-  private def packBlockWidth(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Long =
+  private def packBlockWidth(spark: SparkSession, dir: String): Long =
     math.max(1L, math.round(math.sqrt(
       documents(spark, dir).count().toDouble)))
+
+  /** The two-level prefix sum over doc_id order: (blk, doc_id, n_tok,
+    * wsum, bpre), where `bpre + wsum - n_tok` is a doc's global token
+    * start offset.
+    */
+  private def packOffsets(spark: SparkSession, dir: String): DataFrame = {
+    val blkW = packBlockWidth(spark, dir)
+    val t = documents(spark, dir)
+      .selectExpr("doc_id", "CAST(size(split(text, ' ')) AS BIGINT) AS n_tok",
+        s"doc_id div $blkW AS blk")
+    val within = t.withColumn("wsum",
+      sum("n_tok").over(Window.partitionBy("blk").orderBy("doc_id")))
+    val blkPre = t.groupBy("blk").agg(sum("n_tok").as("btot"))
+      .withColumn("bpre", // ~√N rows: the serial step stays corpus-balanced
+        sum("btot").over(Window.orderBy("blk")) - col("btot"))
+      .select("blk", "bpre")
+    within.join(broadcast(blkPre), "blk")
+  }
 
   /** Sequence packing (the pre-tokenization step that concatenates the
     * corpus in a canonical order and slices fixed-token training
@@ -586,17 +613,7 @@ object QualityQueries {
        |      FROM documents) t
        |ORDER BY doc_id""".stripMargin
   ) { (spark, dir) =>
-    val blkW = packBlockWidth(spark, dir)
-    val t = documents(spark, dir)
-      .selectExpr("doc_id", "CAST(size(split(text, ' ')) AS BIGINT) AS n_tok",
-        s"doc_id div $blkW AS blk")
-    val within = t.withColumn("wsum",
-      sum("n_tok").over(Window.partitionBy("blk").orderBy("doc_id")))
-    val blkPre = t.groupBy("blk").agg(sum("n_tok").as("btot"))
-      .withColumn("bpre", // ~√N rows: the serial step stays corpus-balanced
-        sum("btot").over(Window.orderBy("blk")) - col("btot"))
-      .select("blk", "bpre")
-    within.join(broadcast(blkPre), "blk")
+    packOffsets(spark, dir)
       .selectExpr("doc_id", "n_tok", "bpre + wsum - n_tok AS start_off",
         s"(bpre + wsum - n_tok) div $PackCapacity AS seq_id")
       .orderBy("doc_id")
@@ -636,17 +653,7 @@ object QualityQueries {
        |  seq_id = start_off // $PackCapacity AS is_head
        |FROM sp ORDER BY doc_id, seq_id""".stripMargin
   ) { (spark, dir) =>
-    val blkW = packBlockWidth(spark, dir)
-    val t = documents(spark, dir)
-      .selectExpr("doc_id", "CAST(size(split(text, ' ')) AS BIGINT) AS n_tok",
-        s"doc_id div $blkW AS blk")
-    val within = t.withColumn("wsum",
-      sum("n_tok").over(Window.partitionBy("blk").orderBy("doc_id")))
-    val blkPre = t.groupBy("blk").agg(sum("n_tok").as("btot"))
-      .withColumn("bpre",
-        sum("btot").over(Window.orderBy("blk")) - col("btot"))
-      .select("blk", "bpre")
-    within.join(broadcast(blkPre), "blk")
+    packOffsets(spark, dir)
       .selectExpr("doc_id", "n_tok", "bpre + wsum - n_tok AS start_off")
       .selectExpr("doc_id", "n_tok", "start_off",
         s"explode(sequence(start_off div $PackCapacity, (start_off + n_tok - 1) div $PackCapacity)) AS seq_id")
@@ -868,7 +875,7 @@ object QualityQueries {
       .selectExpr("source", "n_h", "wgt",
         s"least(((n_total div $NeymanBudgetDiv) * wgt) div wsum, n_h) AS alloc_n")
     val rk = m.withColumn("samp_rank",
-      row_number().over(Window.partitionBy("source").orderBy("h", "doc_id")).cast("long"))
+      rowNumber("source")(col("h"), col("doc_id")).cast("long"))
     rk.join(broadcast(alloc.select("source", "alloc_n")), "source")
       .select(col("doc_id"), col("source"), col("x"), col("samp_rank"),
         col("alloc_n"), (col("samp_rank") <= col("alloc_n")).as("kept"))
@@ -1059,9 +1066,6 @@ object QualityQueries {
     */
   val distinctSketch = QueryDef.sql(
     "llm_distinct_sketch", {
-      val est = s"""CASE WHEN k_used < $SketchK THEN CAST(k_used AS DOUBLE)
-                   |    ELSE (CAST(${SketchK - 1} AS DOUBLE) * POW(2, 60)) / CAST(kth_min AS DOUBLE) END"""
-        .stripMargin.replace("\n", "")
       s"""WITH toks AS (SELECT lang, string_split(text, ' ') AS tk FROM documents),
          |units AS (
          |  SELECT 'token' AS grain, lang, unnest(tk) AS u FROM toks
@@ -1075,7 +1079,7 @@ object QualityQueries {
          |kept AS (SELECT grain, lang, CAST(max(nx) AS BIGINT) AS n_exact,
          |    CAST(count(*) AS BIGINT) AS k_used, max(h) AS kth_min
          |  FROM ranked WHERE r <= $SketchK GROUP BY grain, lang),
-         |est AS (SELECT grain, lang, n_exact, k_used, kth_min, $est AS est_distinct FROM kept)
+         |est AS (SELECT grain, lang, n_exact, k_used, kth_min, $kmvEstSql AS est_distinct FROM kept)
          |SELECT grain, lang, n_exact, k_used, kth_min, est_distinct,
          |  ABS(est_distinct - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE) * 1000000 AS err_ppm
          |FROM est ORDER BY grain, lang""".stripMargin
@@ -1093,24 +1097,21 @@ object QualityQueries {
       .distinct()
     val wg = Window.partitionBy("grain", "lang")
     val kept = dh
-      .withColumn("r", row_number().over(wg.orderBy("h")))
+      .withColumn("r", rowNumber("grain", "lang")(col("h")))
       .withColumn("nx", count(lit(1)).over(wg))
       .filter(col("r") <= SketchK)
       .groupBy("grain", "lang")
       .agg(max("nx").cast("long").as("n_exact"),
         count(lit(1)).as("k_used"), max("h").as("kth_min"))
     kept
-      .withColumn("est_distinct", expr(
-        s"""CASE WHEN k_used < $SketchK THEN CAST(k_used AS DOUBLE)
-           |    ELSE (CAST(${SketchK - 1} AS DOUBLE) * POW(2, 60)) / CAST(kth_min AS DOUBLE) END"""
-          .stripMargin.replace("\n", "")))
+      .withColumn("est_distinct", expr(kmvEstSql))
       .withColumn("err_ppm", expr(
         "ABS(est_distinct - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE) * 1000000"))
       .orderBy("grain", "lang")
   }
 
   /** Shared KMV estimator text — identical arithmetic in both engines. */
-  private val kmvEstSql =
+  private def kmvEstSql =
     s"""CASE WHEN k_used < $SketchK THEN CAST(k_used AS DOUBLE)
        |    ELSE (CAST(${SketchK - 1} AS DOUBLE) * POW(2, 60)) / CAST(kth_min AS DOUBLE) END"""
       .stripMargin.replace("\n", "")
@@ -1148,16 +1149,14 @@ object QualityQueries {
       .select(col("lang"), col("source"),
         expr("CAST(conv(substr(md5(u), 1, 15), 16, 10) AS BIGINT)").as("h"))
       .distinct()
-    val perPart = Window.partitionBy("lang", "source").orderBy("h")
-    dh.withColumn("r", row_number().over(perPart)).filter(col("r") <= SketchK)
+    topK(dh, "r", SketchK)(rowNumber("lang", "source")(col("h")))
       .groupBy("lang", "source")
       .agg(sort_array(collect_list("h")).as("ks"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(states)
     // uniqMerge: union the persisted bottom-K sets, re-take the bottom-K
-    val perLang = Window.partitionBy("lang").orderBy("h")
-    spark.read.parquet(states)
-      .select(col("lang"), explode(col("ks")).as("h")).distinct()
-      .withColumn("r", row_number().over(perLang)).filter(col("r") <= SketchK)
+    topK(spark.read.parquet(states)
+        .select(col("lang"), explode(col("ks")).as("h")).distinct(), "r", SketchK)(
+        rowNumber("lang")(col("h")))
       .groupBy("lang")
       .agg(count(lit(1)).as("k_used"), max("h").as("kth_min"))
       .withColumn("est_distinct", expr(kmvEstSql))
@@ -1231,7 +1230,7 @@ object QualityQueries {
       .select(split(col("text"), " ").as("tk"))
       .select(explode(expr("word_ngrams(tk, 2, false)")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
-    def expand(df: org.apache.spark.sql.DataFrame) = df
+    def expand(df: DataFrame) = df
       .select(col("tok"), col("exact_cnt"), explode(bktExpr).as("rb"))
       .select(col("tok"), col("exact_cnt"),
         col("rb.r").as("r"), col("rb.bkt").as("bkt"))
@@ -1287,8 +1286,7 @@ object QualityQueries {
     documents(spark, dir)
       .selectExpr("doc_id", s"$h AS skey",
         s"(${Text.hexPrefixIntSql(h, 4)}) % $NumShards AS shard")
-      .withColumn("pos", row_number().over(
-        Window.partitionBy("shard").orderBy(col("skey"), col("doc_id"))).cast("long"))
+      .withColumn("pos", rowNumber("shard")(col("skey"), col("doc_id")).cast("long"))
       .selectExpr("doc_id", "CAST(shard AS BIGINT) AS shard", "pos")
       .orderBy("doc_id")
   }
