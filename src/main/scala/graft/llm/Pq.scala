@@ -162,7 +162,9 @@ object Pq {
   /** Full PQ search: encode the corpus (vec_id >= off), build per-query
     * ADC tables (vec_id < off), shortlist by ADC distance, re-rank the
     * shortlist with exact cosine. `cb` must be the (tiny, cached)
-    * trained codebook.
+    * trained codebook. The top-N rows come back unordered, as
+    * [[Ivf.searchWith]]'s: the callers that return them order by
+    * (query_id, rank).
     */
   def search(emb: DataFrame, subn: DataFrame, cb: DataFrame, off: Int,
       shortlist: Int, topN: Int): DataFrame = {
@@ -190,7 +192,6 @@ object Pq {
       .filter(col("rank") <= topN)
       .select(col("query_id"), col("vec_id"), col("adc_dist"),
         col("cos_sim"), col("rank").cast("long").as("rank"))
-      .orderBy("query_id", "rank")
   }
 
   /** DuckDB twin of [[search]] (CTE chain + final SELECT; assumes `emb`,

@@ -58,9 +58,14 @@ object SemDedup {
     * count, oversized clusters split once, still-oversized clusters
     * flagged. Returns (vec_id, cluster_key, split, capped).
     *
-    * The one driver-side action is the sizing `count()` — a scalar
-    * statistic, same role as the stats AQE reads; everything else is a
-    * lazy plan.
+    * Two driver-side actions read scalar statistics, the role of the
+    * stats AQE reads: the sizing `count()` and the largest cluster,
+    * `max(sz)` over the K-row size table. When no cluster exceeds
+    * `maxClusterSize` — every shipped fixture — the split path has
+    * nothing to split and the result is the assignment under its refined
+    * keys (`cent_id·SubCap`, nothing split or capped), returned without
+    * the split path's window, sub-centroid join and re-size join. The
+    * rest is a lazy plan over the checkpointed assignment.
     *
     * Codebook init follows [[Ivf.initCent]]: the vectors with vec_id in
     * [0, K). On a SPARSE id space fewer than K seeds may exist — the
@@ -98,7 +103,7 @@ object SemDedup {
     // [[Ivf.assignHier]]; contract pinned in SemDedupSpec, measured
     // flop/time ratio in CostProbe. localCheckpoint (round 15; was
     // .cache() in r14) because the guard logic below consumes it from
-    // several branches (sizes, flagged, the split path) — N (vec_id,
+    // several branches (sizes, then the result or the split path) — N (vec_id,
     // cent_id) rows, ~16 B/row: the cache kept the full two-level
     // lineage inside every consumer's plan (the 5,000-line formatted
     // plan of the guarded entry), so each of the ~10 downstream jobs
@@ -107,6 +112,35 @@ object SemDedup {
     val assigned = Ivf.assignHier(emb, Ivf.initCent(emb, k, 0), k)
       .localCheckpoint()
     val sizes = assigned.groupBy("cent_id").agg(count(lit(1)).as("sz"))
+    // the second driver action, over the K-row size table: with no
+    // oversized cluster the split path has nothing to split, and what it
+    // computes is every row under cent_id·SubCap, unsplit and uncapped
+    val largest = sizes.agg(coalesce(max("sz"), lit(0L))).head().getLong(0)
+    val refined =
+      if (largest <= maxClusterSize)
+        assigned.select(col("vec_id"),
+          (col("cent_id").cast("long") * SubCap).as("cluster_key"),
+          lit(false).as("split"), lit(false).as("capped"))
+      else splitOversized(emb, assigned, sizes, targetClusterSize, maxClusterSize)
+    // zero-norm vectors have no cosine geometry — Ivf.assign excludes
+    // them from scoring, and silently LOSING them would contradict this
+    // module's loud-exclusion rule. Surface them under the reserved
+    // cluster key -1, capped (= excluded from the pair stage, visible in
+    // cappedClusters); their right handling is exact dedup, same as an
+    // unsplittable identical-vector cluster.
+    val zeroNorm = emb.filter(col("nrm") <= 0)
+      .select(col("vec_id"), lit(-1L).as("cluster_key"),
+        lit(false).as("split"), lit(true).as("capped"))
+    refined.unionByName(zeroNorm)
+  }
+
+  /** The split path of [[guardedAssignWithK]] for an assignment with at
+    * least one cluster over `maxClusterSize`: oversized clusters split
+    * by the second-level quantizer, refined clusters flagged `capped`
+    * when still oversized. Returns (vec_id, cluster_key, split, capped).
+    */
+  private def splitOversized(emb: DataFrame, assigned: DataFrame, sizes: DataFrame,
+      targetClusterSize: Int, maxClusterSize: Int): DataFrame = {
     // sizes is K rows — broadcastable by chooseK's cap
     val flagged = assigned.join(broadcast(sizes), "cent_id")
 
@@ -150,19 +184,9 @@ object SemDedup {
     // `assigned` cache above), lineage truncated.
     val refined = ok.unionByName(subAssigned).localCheckpoint()
     val refinedSizes = refined.groupBy("cluster_key").agg(count(lit(1)).as("rsz"))
-    val flaggedOut = refined.join(refinedSizes, "cluster_key")
+    refined.join(refinedSizes, "cluster_key")
       .select(col("vec_id"), col("cluster_key"), col("split"),
         (col("rsz") > maxClusterSize).as("capped"))
-    // zero-norm vectors have no cosine geometry — Ivf.assign excludes
-    // them from scoring, and silently LOSING them would contradict this
-    // module's loud-exclusion rule. Surface them under the reserved
-    // cluster key -1, capped (= excluded from the pair stage, visible in
-    // cappedClusters); their right handling is exact dedup, same as an
-    // unsplittable identical-vector cluster.
-    val zeroNorm = emb.filter(col("nrm") <= 0)
-      .select(col("vec_id"), lit(-1L).as("cluster_key"),
-        lit(false).as("split"), lit(true).as("capped"))
-    flaggedOut.unionByName(zeroNorm)
   }
 
   /** Within-cluster near-dup pairs over a guarded assignment — capped

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.fixtures.Fixtures
+import graft.fixtures.{Fixtures, SessionCache}
 import graft.fixtures.Fixtures.{documents, embeddings}
 import graft.llm.{Embed, Ivf, Pq}
 
@@ -301,6 +301,7 @@ object RetrievalQueries {
   ) { (spark, dir) =>
     val emb = Embed.prepared(embeddings(spark, dir)).cache()
     Ivf.search(emb, Ivf.initCent(emb, IvfK, NumQueries), IvfK, NumQueries, IvfProbes, 3)
+      .orderBy("query_id", "rank")
   }
 
   /** Number of in-engine Lloyd iterations for the trained codebook. */
@@ -331,6 +332,7 @@ object RetrievalQueries {
       (c, _) => Ivf.lloydIter(emb, c, IvfK))
       .cache() // K rows — stops the search's two broadcasts re-running Lloyd
     Ivf.search(emb, trained, IvfK, NumQueries, IvfProbes, 3)
+      .orderBy("query_id", "rank")
   }
 
   /** [[annIvf]] at the RUNTIME-K scale shape (round 14): the fixture
@@ -377,6 +379,7 @@ object RetrievalQueries {
     val index = Fixtures.derived(spark, dir,
       "ivf_scaled_index")(Ivf.assignHier(emb, cent, k))
     Ivf.searchWith(index, emb, cent, k, NumQueries, IvfProbes, 3)
+      .orderBy("query_id", "rank")
   }
 
   /** PQ shortlist size (ADC candidates per query before exact re-rank).
@@ -412,6 +415,7 @@ object RetrievalQueries {
     // M·K rows — cache stops the search's two consumers re-running Lloyd
     val cb = Pq.lloydIter(subn, Pq.initCb(subn, NumQueries), NumQueries).cache()
     Pq.search(emb, subn, cb, NumQueries, PqShortlist, 3)
+      .orderBy("query_id", "rank")
   }
 
   // ---- TF-IDF retrieval: sparse-vector cosine top-k ----
@@ -754,7 +758,8 @@ object RetrievalQueries {
     * (sf0.1, K = 59 ≥ HierMinK = 32). On the twinned fixture no cluster
     * exceeds the 550 bound at any shipped SF, so the guarded output
     * equals the assignment mapped to refined keys (`cent_id·64`, no
-    * splits, nothing capped) — and if a future fixture DID trip a
+    * splits, nothing capped), which guardedAssign returns without running
+    * the split path — and if a future fixture DID trip a
     * split/cap, the Spark side would emit split/capped rows the oracle
     * doesn't state: a loud value failure, never a silent one. The
     * guard-FIRING paths (split, cap, zero-norm reserve) stay pinned by
@@ -1046,23 +1051,25 @@ object RetrievalQueries {
   private def cosTop10Over(cands: DataFrame): DataFrame =
     top10(cands, "cs", Embed.cosineSql(Embed.dotExpr("qqv", "qv"), "qnrm", "nrm"))
 
-  /** Small daemon pool for overlapping the INDEPENDENT method subtrees of
-    * the composite ANN ledger (guide §2.6): Spark's scheduler happily runs
-    * several jobs at once — actions are only sequential because driver
-    * code calls them sequentially. Under one action the five retrieval
-    * methods' 5-task stages serialized (~3 s wall for ~1.5 s of work at
-    * local[32], per-job timing in OPTIMIZATION_r16.md); materializing
-    * each method from its own thread lets their stages back-fill each
-    * other's idle cores. Sized to the ledger's method count; daemon
-    * threads so the pool never blocks JVM exit.
+  /** Runs each method subtree of the composite ANN ledger on a thread of
+    * its own (guide §2.6): Spark's scheduler happily runs several jobs at
+    * once — actions are only sequential because driver code calls them
+    * sequentially. Under one action the retrieval methods' 5-task stages
+    * serialized (~3 s wall for ~1.5 s of work at local[32], per-job
+    * timing in OPTIMIZATION_r16.md); materializing each method from its
+    * own thread lets their stages back-fill each other's idle cores.
+    * A fresh daemon thread per method, not a pool: a thread takes the
+    * Spark local properties (job group, scheduler pool, a caller's job
+    * labels) of the thread that creates it, so a pooled thread kept those
+    * of the first call and its jobs escaped every later caller's group
+    * and job counts. Daemon, so a method never blocks JVM exit.
     */
-  private lazy val ledgerPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(5,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-ledger-overlap")
-          t.setDaemon(true); t
-        }))
+  private val ledgerThreads: scala.concurrent.ExecutionContext =
+    scala.concurrent.ExecutionContext.fromExecutor((r: Runnable) => {
+      val t = new Thread(r, "graft-ledger-overlap")
+      t.setDaemon(true)
+      t.start()
+    })
 
   /** The values of `futures`, awaited in order. Every future is waited
     * for before the first failure is rethrown, so a failed fan-out leaves
@@ -1080,14 +1087,24 @@ object RetrievalQueries {
   }
 
   /** The recall ledgers' corpus: the prepared near-dup corpus without
-    * zero-norm vectors, cached. Spark keys that cache by plan, so every
-    * entry that builds this frame ([[annLedger]], [[mrlRecall]]) shares
-    * one copy: the first `.cache()` fills it and a later one only logs
-    * "Asked to cache already cached data". The copy lives until
-    * [[Fixtures.clearDerivedCache]] drops every cached plan.
+    * zero-norm vectors, cached and filled once per session, so both
+    * entries that read it ([[annLedger]], [[mrlRecall]]) share one copy.
+    * Filled by one scan before any consumer runs: the ledger's plans scan
+    * it several times at once (the ground truth alone joins it with its
+    * own query block, and the five method threads start together), and
+    * each concurrent scan of an unfilled cache computed its partitions,
+    * the block manager keeping one copy. Session lifetime in
+    * [[SessionCache]], like the fixtures it derives from:
+    * [[Fixtures.clearDerivedCache]] drops the entry and the cached plan
+    * together.
     */
   private def ledgerCorpus(spark: SparkSession, dir: String): DataFrame =
-    nearDupCorpus(spark, dir).filter(col("nrm") > 0).cache()
+    SessionCache(SessionCache.Session,
+        "ledger_corpus#" + spark.sparkContext.applicationId + "#" + dir) {
+      val emb = nearDupCorpus(spark, dir).filter(col("nrm") > 0).cache()
+      emb.count()
+      emb
+    }
 
   /** A top-10 hit `(query_id, vec_id)` as one BIGINT join key. Exact:
     * every query id is a corpus id in [0, [[NumQueries]]), so the key
@@ -1220,7 +1237,7 @@ object RetrievalQueries {
     // trained codebook are session-memoized), and the values are those
     // of the identical lazy plans.
     import scala.concurrent.Future
-    implicit val ec: scala.concurrent.ExecutionContext = ledgerPool
+    implicit val ec: scala.concurrent.ExecutionContext = ledgerThreads
     val exactF = Future(Fixtures.derived(spark, dir,
       "ann_exact_top10")(exactCosTop10(emb)))
     // LSH: annLsh plan at topN=10

@@ -54,13 +54,16 @@ class IvfSpec extends SparkSuite {
   }
 
   test("searchScaled ≡ search below HierMinK (the degenerate two-level branch)") {
-    // K = 16 < HierMinK: assignHier sets G = K and the two-level plan
-    // degenerates to the flat argmax, so the scaled search must return
-    // the flat search's rows exactly (the r14 parity contract)
+    // K = 16 < HierMinK: the two-level plan sets G = K and degenerates
+    // to the flat argmax, so a search over it must return the flat
+    // search's rows exactly (the r14 parity contract, which lets
+    // assignHier run the flat plan at this K). Searches return their
+    // rows unordered, so they are compared by (query_id, rank).
     val cent = Ivf.initCent(emb, K, NQ)
     def rows(df: DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
-    assert(rows(Ivf.searchScaled(emb, cent, K, NQ, 2, 3)) ==
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      .sortBy(r => (r._1, r._4)).toSeq
+    assert(rows(Ivf.searchWith(Ivf.assignTwoLevel(emb, cent, K), emb, cent, K, NQ, 2, 3)) ==
       rows(Ivf.search(emb, cent, K, NQ, 2, 3)))
   }
 

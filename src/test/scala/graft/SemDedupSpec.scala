@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.llm.SemDedup
@@ -113,14 +120,16 @@ class SemDedupSpec extends SparkSuite {
   /** Parity pins for the round-14 two-level assignment
     * ([[graft.llm.Ivf.assignHier]], r13 verdict item 1): BELOW
     * [[graft.llm.Ivf.HierMinK]] the two-level plan sets G = K and must
-    * return ROW-IDENTICAL output to the flat N×K argmax (the degenerate
-    * branch both the driver gate at sf0.001/sf0.01 and these fixtures
-    * exercise against the two-level DuckDB twin).
+    * return ROW-IDENTICAL output to the flat N×K argmax — the fact that
+    * lets assignHier run the flat plan there, and that the driver gate at
+    * sf0.001/sf0.01 checks against the two-level DuckDB twin. The
+    * two-level plan is called directly, since assignHier itself now
+    * dispatches to [[graft.llm.Ivf.assign]] at these K.
     */
   private def assertHierParity(e: org.apache.spark.sql.DataFrame, k: Int): Unit = {
     val flat = graft.llm.Ivf.assign(e, graft.llm.Ivf.initCent(e, k, 0), k)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val hier = graft.llm.Ivf.assignHier(e, graft.llm.Ivf.initCent(e, k, 0), k)
+    val hier = graft.llm.Ivf.assignTwoLevel(e, graft.llm.Ivf.initCent(e, k, 0), k)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(hier == flat, s"hier/flat assignment diverged at K=$k")
   }
@@ -180,6 +189,78 @@ class SemDedupSpec extends SparkSuite {
     assert(coH >= coF - 2,
       s"two-level broke twin co-assignment: $coH/50 vs flat $coF/50")
     real.unpersist()
+  }
+
+  /** The physical plan of every SQL execution `body` starts, the eager
+    * checkpoints included (the returned frame's plan no longer shows
+    * what they ran).
+    */
+  private def plansOf(body: => Unit): Seq[SparkPlanInfo] = {
+    val sc = spark.sparkContext
+    val sentinel = s"semdedup-plans-${System.nanoTime()}"
+    val plans = new ConcurrentLinkedQueue[SparkPlanInfo]()
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull == sentinel)
+          sentinelSeen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // listener events arrive in order: once the sentinel job is seen,
+      // every execution the body started has been recorded
+      sc.setJobGroup(sentinel, sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(30, TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    plans.asScala.toSeq
+  }
+
+  private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+
+  /** The split path's shape in `plans`: the count of Window operators and
+    * of sub-centroid joins (equi-joins on cent_id with a Window below).
+    */
+  private def splitShape(plans: Seq[SparkPlanInfo]): (Int, Int) = {
+    val all = plans.flatMap(nodes)
+    val subJoins = all.count(n => n.nodeName.endsWith("Join") &&
+      n.simpleString.contains("[cent_id#") && nodes(n).exists(_.nodeName == "Window"))
+    (all.count(_.nodeName == "Window"), subJoins)
+  }
+
+  test("guardedAssign without an oversized cluster runs no Window and no " +
+      "sub-centroid join (sf0.001 near-dup corpus)") {
+    graft.expr.GraftFunctions.register(spark)
+    val real = graft.llm.Embed.prepared(
+      graft.fixtures.Fixtures.embeddingsNearDup(spark, "/root/testdata/sf0.001")).cache()
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val plans = plansOf {
+      rows = SemDedup.guardedAssign(real, targetClusterSize = 35, maxClusterSize = 550)
+        .collect()
+    }
+    assert(rows.length == real.count())
+    assert(rows.forall(r => !r.getBoolean(2) && !r.getBoolean(3)),
+      "nothing is oversized on this corpus, so nothing splits or caps")
+    assert(splitShape(plans) == ((0, 0)),
+      plans.map(_.simpleString).mkString("\n"))
+    real.unpersist()
+  }
+
+  test("guardedAssign on the skewed fixture still runs the split path's Window " +
+      "and sub-centroid join") {
+    val plans = plansOf {
+      SemDedup.guardedAssign(emb, targetClusterSize = 25, maxClusterSize = 50).collect()
+    }
+    val (windows, subJoins) = splitShape(plans)
+    assert(windows >= 1 && subJoins >= 1, s"windows=$windows, sub-centroid joins=$subJoins")
   }
 
   test("guardedPairs covers the split clusters and excludes the capped quadratic") {

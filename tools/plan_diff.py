@@ -6,10 +6,12 @@
 Each dump is the stdout of `sbt "runMain graft.Explain [names...]"`. Lines
 outside the `==== name ====` sections (sbt's own output) are dropped, and
 before comparing, expression ids (`#123`), `plan_id=`/`id=` numbers,
-`graft_scratch_*` temp paths, RDD ids (`MapPartitionsRDD[225]`) and the
-source `File.scala:line` of an RDD's call site are replaced with
-placeholders: they change from run to run, or when code moves, without
-the plan changing. Both dumps
+`graft_scratch_*` temp paths, RDD ids (`MapPartitionsRDD[225]`), the
+source `File.scala:line` of an RDD's call site, JVM lambda names
+(`$Lambda$3524/0x...@669f2128`) and the checkout's `spark-warehouse`
+directory are replaced with placeholders: they change from run to run,
+from checkout to checkout, or when code moves, without the plan
+changing. Both dumps
 must explain the same names in the same order: an entry's plan shows an
 `InMemoryRelation` where an earlier entry of the same run cached the same
 subplan. Prints a unified diff and exits 1 on any difference, 0 otherwise.
@@ -25,6 +27,8 @@ SUBS = [
     (re.compile(r"graft_scratch_[^/\s,\]\)]*"), "graft_scratch_X"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\b\w+\.scala:\d+"), "SRC:N"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"file:\S*/spark-warehouse/"), "file:WAREHOUSE/"),
 ]
 
 
