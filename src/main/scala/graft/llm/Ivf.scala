@@ -129,9 +129,9 @@ object Ivf {
     * separate N-gate would add a branch (and an oracle-visible algorithm
     * switch) to save at most the measured ~0.3 s at the 70k corner.
     * Below HierMinK [[assignHier]] RUNS the flat plan, not only equals
-    * it: the degenerate two-level plan paid two Lloyd iterations and a
-    * `collect`, a `localCheckpoint` of the fine membership and two
-    * broadcast argmax stages for the flat argmax's result.
+    * it: the degenerate two-level plan would add two Lloyd iterations and
+    * a `collect`, a `localCheckpoint` of the fine membership and two
+    * broadcast argmax stages for the same result.
     */
   val HierMinK = 32
 
